@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointOps
 
 /** BPE tokenizer TRAINING (Sennrich et al. 2016) — the engine already
   * APPLIES a committed GPT-2 merge list (`functions/Bpe.scala`); this
@@ -143,7 +144,7 @@ object BpeTrainer {
     // RENDERING the cached plan's tree string (CachedRDDBuilder does it
     // on every persist call) takes minutes — jstack-verified on the
     // 64-merge A/B probe.
-    var (cur, curRdd) = org.apache.spark.sql.graft.CheckpointOps.checkpoint(
+    var cur = CheckpointOps.materialize(
       docs
         .select(explode(Dedup.tokens(col(textCol))).as("w"))
         .groupBy("w").agg(count(lit(1)).as("freq"))
@@ -159,7 +160,7 @@ object BpeTrainer {
       rounds += 1
       val want = math.min(nMerges - r + 1, maxBatch)
       val lim = want * 2 + 8
-      val top = cur
+      val top = cur.frame
         .select(col("freq"), explode(adjacentPairs(col("sy"))).as("p"))
         .groupBy(col("p.a").as("a"), col("p.b").as("b"))
         .agg(sum("freq").as("cnt"))
@@ -218,17 +219,14 @@ object BpeTrainer {
         }
         val ls = batch.map(_._1).toSeq
         val rs = batch.map(_._2).toSeq
-        val (next, nextRdd) =
-          org.apache.spark.sql.graft.CheckpointOps.checkpoint(cur
-            .select(col("freq"),
-              mergeBatchUdf(col("sy"), typedlit(ls), typedlit(rs))
-                .as("sy")))
-        curRdd.unpersist(false)
+        val next = CheckpointOps.materialize(cur.frame
+          .select(col("freq"),
+            mergeBatchUdf(col("sy"), typedlit(ls), typedlit(rs)).as("sy")))
+        cur.release()
         cur = next
-        curRdd = nextRdd
       }
     }
-    curRdd.unpersist(false)
+    cur.release()
     (merges.toSeq.toDF("rank", "lhs", "rhs", "pair_count")
       .select(col("rank").cast("int").as("rank"), col("lhs"), col("rhs"),
         col("pair_count")), rounds)

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.CheckpointOps
+import org.apache.spark.sql.graft.{CheckpointOps, Materialized}
 
 /** Distributed connected components over an edge DataFrame.
   *
@@ -14,12 +14,12 @@ import org.apache.spark.sql.graft.CheckpointOps
   * must be set-stable, not root-stable).
   *
   * Each round is two shuffles (neighbor-min groupBy + label-of-label join)
-  * and exactly ONE Spark job: [[CheckpointOps.checkpointDiff]] materializes
-  * the round into persisted blocks while an accumulator counts changed
+  * and exactly ONE Spark job: [[CheckpointOps.materialize]] writes the
+  * round into persisted blocks while an accumulator counts changed
   * labels in the same pass (no separate convergence-probe job), caps the
   * carried size estimate (join-size products otherwise compound per round
   * into million-digit BigInts inside stats estimation), and hands back the
-  * RDD handle so the PREVIOUS round's blocks are unpersisted as soon as the
+  * block handle so the PREVIOUS round's blocks are released as soon as the
   * new round is on disk/memory — without that, a long run of CC-using
   * queries piles dead checkpoint blocks into the block manager until
   * deferred GC lands inside later queries' wall time (round-3 bench: 2-4x
@@ -126,7 +126,7 @@ object ConnectedComponents {
     // union re-executed the whole contraction subtree once per branch
     // inside this materialization (same multiset, so the distinct is
     // unchanged).
-    val (sym, symRdd) = CheckpointOps.checkpoint(
+    val sym = CheckpointOps.materialize(
       contracted.select(explode(array(
           struct($"cu".as("u"), $"cv".as("v")),
           struct($"cv".as("u"), $"cu".as("v")),
@@ -135,8 +135,8 @@ object ConnectedComponents {
         .select($"p.u".as("u"), $"p.v".as("v"))
         .distinct())
 
-    var (labels, labelsRdd) = CheckpointOps.checkpoint(
-      sym.groupBy($"u".as("node")).agg(min($"v").as("component")))
+    var labels = CheckpointOps.materialize(
+      sym.frame.groupBy($"u".as("node")).agg(min($"v").as("component")))
     val debug = sys.env.contains("SPARK_GRAFT_CC_DEBUG")
     var converged = false
     var iter = 0
@@ -147,8 +147,8 @@ object ConnectedComponents {
       //    the old label for convergence counting falls out of this same
       //    groupBy — one whole labels join per round saved vs joining the
       //    previous frame back on node.
-      val viaEdges = sym
-        .join(labels.select($"node".as("v"), $"component"), "v")
+      val viaEdges = sym.frame
+        .join(labels.frame.select($"node".as("v"), $"component"), "v")
         .groupBy($"u".as("node"))
         .agg(min($"component").as("component"),
           max(when($"v" === $"u", $"component")).as("old"))
@@ -158,29 +158,30 @@ object ConnectedComponents {
       //    jumps per round roughly halves the number of rounds on
       //    chain-shaped components.
       val hop1 = viaEdges
-        .join(labels.select($"node".as("component"), $"component".as("c2")),
+        .join(labels.frame.select($"node".as("component"),
+          $"component".as("c2")),
           Seq("component"), "left")
         .select($"node", least($"component", coalesce($"c2", $"component"))
           .as("component"), $"old")
       val next = hop1
-        .join(labels.select($"node".as("component"), $"component".as("c3")),
+        .join(labels.frame.select($"node".as("component"),
+          $"component".as("c3")),
           Seq("component"), "left")
         .select($"node", least($"component", coalesce($"c3", $"component"))
           .as("component"), $"old")
       // one job: materialize + count(component != old); cols are (node=0,
       // component=1, old=2)
-      val (nextFlat, nextRdd, changed) =
-        CheckpointOps.checkpointDiff(next, 1, 2)
-      labelsRdd.unpersist(false) // previous round's blocks are dead now
-      labels = nextFlat.drop("old")
-      labelsRdd = nextRdd
+      val nextLabels = CheckpointOps.materialize(next, diff = Some((1, 2)))
+      val changed = nextLabels.diff.get
+      labels.release() // previous round's blocks are dead now
+      labels = nextLabels.select($"node", $"component")
       converged = changed == 0
       iter += 1
       if (debug) System.err.println(
         f"CC round $iter: ${(System.nanoTime() - roundT0) / 1e9}%.2fs changed=$changed")
     }
-    symRdd.unpersist(false) // labels is materialized; the edge set is dead
-    labels
+    sym.release() // labels is materialized; the edge set is dead
+    labels.frame
   }
 
   /** STRONGLY connected components over a DIRECTED edge DataFrame — the
@@ -222,7 +223,29 @@ object ConnectedComponents {
           maxOuterRounds: Int = 60, maxInnerRounds: Int = 200): DataFrame =
     sccWithHandles(edges, srcCol, dstCol, maxOuterRounds, maxInnerRounds)._1
 
-  /** [[scc]] that also hands back the persisted RDDs backing the
+  /** The pinned-set discipline of the SCC family: every round frame
+    * materializes lineage-truncated (round counts are data-dependent)
+    * through [[apply]] and registers; [[fail]] frees the WHOLE live set
+    * before throwing (the checkBudget discipline — a long-lived session
+    * that catches the error must not keep round state pinned). */
+  private final class Pins {
+    private val live = scala.collection.mutable.Set.empty[Materialized]
+    def apply(df: DataFrame): Materialized = {
+      val m = CheckpointOps.materialize(df, truncate = true)
+      live += m
+      m
+    }
+    def adopt(ms: Seq[Materialized]): Unit = live ++= ms
+    def unpin(m: Materialized): Unit = { live -= m; m.release() }
+    def held: Seq[Materialized] = live.toSeq
+    def fail(msg: String): Nothing = {
+      live.foreach(_.release())
+      live.clear()
+      throw new IllegalArgumentException(msg)
+    }
+  }
+
+  /** [[scc]] that also hands back the materialized frames backing the
     * result (the settled per-pass frames): a caller that re-materializes
     * the labels into its own state — [[sccTopoLevels]] — can then free
     * them instead of leaving corpus-scale blocks pinned until GC.
@@ -230,47 +253,33 @@ object ConnectedComponents {
     * [[sccCondense]]) must keep them persisted. */
   private[graft] def sccWithHandles(edges: DataFrame, srcCol: String = "src",
           dstCol: String = "dst", maxOuterRounds: Int = 60,
-          maxInnerRounds: Int = 200): (DataFrame, Seq[RDD]) = {
+          maxInnerRounds: Int = 200): (DataFrame, Seq[Materialized]) = {
     val spark = edges.sparkSession
     import spark.implicits._
-    // every persisted round frame registers here; the round-cap error
-    // paths free the WHOLE live set before throwing (the checkBudget
-    // discipline — a long-lived session that catches the error must not
-    // keep round state pinned). On success the set holds exactly the
-    // blocks backing the returned union (found frames + e0) — the
-    // caller's result state, freed by its own lifecycle.
-    val pinned = scala.collection.mutable.Set.empty[RDD]
-    def pin[T](t: (DataFrame, RDD)): (DataFrame, RDD) = { pinned += t._2; t }
-    def pinC(t: (DataFrame, RDD, Long)): (DataFrame, RDD, Long) = {
-      pinned += t._2; t
-    }
-    def unpin(r: RDD): Unit = { pinned -= r; r.unpersist(false) }
-    def failScc(msg: String): Nothing = {
-      pinned.foreach(_.unpersist(false))
-      pinned.clear()
-      throw new IllegalArgumentException(msg)
-    }
+    // On success the pinned set holds exactly the blocks backing the
+    // returned union (the found frames) — the caller's result state,
+    // freed by its own lifecycle.
+    val pin = new Pins
     val sel = edges.select(col(srcCol).as("esrc"), col(dstCol).as("edst"))
-    val (e0, e0Rdd) = pin(CheckpointOps.checkpointTruncated(
-      sel.where($"esrc" =!= $"edst").distinct()))
-    var (active, activeRdd, nActive) = pinC(
-      CheckpointOps.checkpointCountTruncated(
-        sel.select($"esrc".as("node")).union(sel.select($"edst".as("node")))
-          .distinct().select($"node", lit("r").as("part"))))
+    val e0 = pin(sel.where($"esrc" =!= $"edst").distinct())
+    var active = pin(
+      sel.select($"esrc".as("node")).union(sel.select($"edst".as("node")))
+        .distinct().select($"node", lit("r").as("part")))
     val emptyOut = sel.select($"esrc".as("node"), $"esrc".as("scc"))
       .where(lit(false))
     val found = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var outer = 0
-    while (nActive > 0) {
-      if (outer >= maxOuterRounds) failScc(
+    while (active.rows > 0) {
+      if (outer >= maxOuterRounds) pin.fail(
         s"SCC did not finish in $maxOuterRounds FW-BW passes " +
-          s"($nActive nodes still live) — raise maxOuterRounds")
+          s"(${active.rows} nodes still live) — raise maxOuterRounds")
       // live edges: both endpoints in the same partition class
-      val (aliveE, aliveERdd) = pin(CheckpointOps.checkpointTruncated(e0
-        .join(active.select($"node".as("esrc"), $"part"), "esrc")
-        .join(active.select($"node".as("edst"), $"part".as("p2")), "edst")
+      val aliveE = pin(e0.frame
+        .join(active.frame.select($"node".as("esrc"), $"part"), "esrc")
+        .join(active.frame.select($"node".as("edst"), $"part".as("p2")),
+          "edst")
         .where($"part" === $"p2")
-        .select($"part", $"esrc", $"edst")))
+        .select($"part", $"esrc", $"edst"))
       // TRIM: a node missing a live out-edge or in-edge inside its class
       // lies on no cycle — a singleton SCC, settled without a flood
       // fill. Without this, nodes whose edges all crossed into removed
@@ -278,25 +287,22 @@ object ConnectedComponents {
       // single pivot at a time (measured: the 1500-node registry graph
       // stranded 1204 such singletons — Θ(n) passes); with it they all
       // settle in the pass that strands them.
-      val kept = active
-        .join(aliveE.select($"part", $"esrc".as("node")).distinct(),
+      val kept = active.frame
+        .join(aliveE.frame.select($"part", $"esrc".as("node")).distinct(),
           Seq("part", "node"), "left_semi")
-        .join(aliveE.select($"part", $"edst".as("node")).distinct(),
+        .join(aliveE.frame.select($"part", $"edst".as("node")).distinct(),
           Seq("part", "node"), "left_semi")
-      val (trimmed, trimmedRdd, nTrim) = pinC(CheckpointOps
-        .checkpointCountTruncated(active
-          .join(kept.select($"part", $"node"), Seq("part", "node"),
-            "left_anti")
-          .select($"node", $"node".as("scc"))))
-      if (nTrim > 0) found += trimmed else unpin(trimmedRdd)
-      val (keptFlat, keptRdd, nKept) =
-        pinC(CheckpointOps.checkpointCountTruncated(kept))
-      if (nKept == 0) {
-        unpin(activeRdd)
-        unpin(aliveERdd)
-        active = keptFlat
-        activeRdd = keptRdd
-        nActive = 0
+      val trimmed = pin(active.frame
+        .join(kept.select($"part", $"node"), Seq("part", "node"),
+          "left_anti")
+        .select($"node", $"node".as("scc")))
+      if (trimmed.rows > 0) found += trimmed.frame else pin.unpin(trimmed)
+      val keptM = pin(kept)
+      val keptFlat = keptM.frame
+      if (keptM.rows == 0) {
+        pin.unpin(active)
+        pin.unpin(aliveE)
+        active = keptM
       } else {
       val pr = Dedup.md5Hash32($"node".cast("string"), lit(0))
       // deterministic pseudo-random pivot: min md5 priority per class —
@@ -310,44 +316,42 @@ object ConnectedComponents {
       // round materializes only the freshly-reached nodes; the reached
       // set is the lazy union of the per-round frames (pairHopDistances
       // discipline — rows are written once, not rewritten per round).
-      def reach(dirEdges: DataFrame): (DataFrame, Seq[RDD]) = {
-        var (reached, seedRdd) = pin(CheckpointOps.checkpointTruncated(piv))
-        var rdds = Vector[RDD](seedRdd)
+      def reach(dirEdges: DataFrame): (DataFrame, Seq[Materialized]) = {
+        val seed = pin(piv)
+        var reached = seed.frame
+        var frames = Vector(seed)
         var frontier = reached
         var inner = 0
         var grew = true
         while (grew) {
-          if (inner >= maxInnerRounds) failScc(
+          if (inner >= maxInnerRounds) pin.fail(
             s"SCC flood fill exceeded $maxInnerRounds hops — " +
               "raise maxInnerRounds for very-high-diameter graphs")
           val step = dirEdges
             .join(frontier.select($"part", $"node".as("u")), Seq("part", "u"))
             .select($"part", $"v".as("node")).distinct()
-          val (fresh, freshRdd, nFresh) = pinC(
-            CheckpointOps.checkpointCountTruncated(
-              step.join(reached, Seq("part", "node"), "left_anti")))
-          if (nFresh == 0) {
-            unpin(freshRdd)
+          val fresh = pin(step.join(reached, Seq("part", "node"), "left_anti"))
+          if (fresh.rows == 0) {
+            pin.unpin(fresh)
             grew = false
           } else {
-            rdds :+= freshRdd
-            reached = reached.union(fresh)
-            frontier = fresh
+            frames :+= fresh
+            reached = reached.union(fresh.frame)
+            frontier = fresh.frame
           }
           inner += 1
         }
-        (reached, rdds)
+        (reached, frames)
       }
-      val (fwd, fwdRdds) =
-        reach(aliveE.select($"part", $"esrc".as("u"), $"edst".as("v")))
-      val (bwd, bwdRdds) =
-        reach(aliveE.select($"part", $"edst".as("u"), $"esrc".as("v")))
+      val (fwd, fwdFrames) =
+        reach(aliveE.frame.select($"part", $"esrc".as("u"), $"edst".as("v")))
+      val (bwd, bwdFrames) =
+        reach(aliveE.frame.select($"part", $"edst".as("u"), $"esrc".as("v")))
       val sccSet = fwd.join(bwd, Seq("part", "node"))
-      val (out, _) = pin(CheckpointOps.checkpointTruncated(
+      found += pin(
         sccSet.join(sccSet.groupBy($"part").agg(min($"node").as("scc")),
             "part")
-          .select($"node", $"scc")))
-      found += out
+          .select($"node", $"scc")).frame
       // remainder splits into D\S ('f'), A\S ('b'), neither ('n') — no
       // SCC straddles these, so each class recurses independently
       val nextActive = keptFlat
@@ -363,24 +367,21 @@ object ConnectedComponents {
             when($"in_f".isNotNull, lit("f"))
               .when($"in_b".isNotNull, lit("b"))
               .otherwise(lit("n"))).as("part"))
-      val (nxt, nxtRdd, nNxt) =
-        pinC(CheckpointOps.checkpointCountTruncated(nextActive))
-      unpin(activeRdd)
-      unpin(aliveERdd)
-      unpin(keptRdd)
-      fwdRdds.foreach(unpin)
-      bwdRdds.foreach(unpin)
+      val nxt = pin(nextActive)
+      pin.unpin(active)
+      pin.unpin(aliveE)
+      pin.unpin(keptM)
+      fwdFrames.foreach(pin.unpin)
+      bwdFrames.foreach(pin.unpin)
       active = nxt
-      activeRdd = nxtRdd
-      nActive = nNxt
       }
       outer += 1
     }
-    unpin(activeRdd)
-    unpin(e0Rdd)
+    pin.unpin(active)
+    pin.unpin(e0)
     // pinned now holds exactly the found frames' blocks — the result's
     // backing state, surfaced to handle-aware callers
-    (found.foldLeft(emptyOut)(_ union _), pinned.toSeq)
+    (found.foldLeft(emptyOut)(_ union _), pin.held)
   }
 
   /** INCREMENTAL connected-components maintenance — fold an ingest
@@ -556,23 +557,22 @@ object ConnectedComponents {
       : DataFrame = {
     val spark = initialEdges.sparkSession
     import spark.implicits._
-    val (base0, _) = CheckpointOps.checkpointTruncated(
-      run(initialEdges, srcCol, dstCol))
+    val base0 = CheckpointOps.materialize(
+      run(initialEdges, srcCol, dstCol), truncate = true).frame
     var frames = Vector(base0)
-    var (alias, aliasRdd) = CheckpointOps.checkpointTruncated(
+    var alias = CheckpointOps.materialize(
       base0.select($"component".as("c"), $"component".as("canon"))
-        .where(lit(false)))
+        .where(lit(false)), truncate = true)
     batches.foreach { b =>
       val base = frames.reduce(_ unionByName _)
-      val (ins, na) = incrementalMergeParts(base, alias, b, srcCol, dstCol)
-      val (insFlat, _) = CheckpointOps.checkpointTruncated(ins)
-      val (naFlat, naRdd) = CheckpointOps.checkpointTruncated(na)
-      aliasRdd.unpersist(false)
-      frames :+= insFlat
-      alias = naFlat
-      aliasRdd = naRdd
+      val (ins, na) =
+        incrementalMergeParts(base, alias.frame, b, srcCol, dstCol)
+      frames :+= CheckpointOps.materialize(ins, truncate = true).frame
+      val nextAlias = CheckpointOps.materialize(na, truncate = true)
+      alias.release()
+      alias = nextAlias
     }
-    resolveLabels(frames.reduce(_ unionByName _), alias)
+    resolveLabels(frames.reduce(_ unionByName _), alias.frame)
   }
 
   /** CONDENSATION of the directed graph: collapse every SCC to one node
@@ -629,71 +629,54 @@ object ConnectedComponents {
     import spark.implicits._
     // the pinned-set discipline of scc(): every live round frame
     // registers; the cycle-guard error path frees the WHOLE set
-    val pinned = scala.collection.mutable.Set.empty[RDD]
-    def pin(t: (DataFrame, RDD)): (DataFrame, RDD) = { pinned += t._2; t }
-    def pinC(t: (DataFrame, RDD, Long)): (DataFrame, RDD, Long) = {
-      pinned += t._2; t
-    }
-    def unpin(r: RDD): Unit = { pinned -= r; r.unpersist(false) }
-    val (sccDf, sccRdds) = sccWithHandles(edges, srcCol, dstCol)
-    sccRdds.foreach(pinned += _)
-    val (lab, labRdd) = pin(CheckpointOps.checkpointTruncated(sccDf))
+    val pin = new Pins
+    val (sccDf, sccFrames) = sccWithHandles(edges, srcCol, dstCol)
+    pin.adopt(sccFrames)
+    val lab = pin(sccDf)
     val e = edges.select(col(srcCol).as("esrc"), col(dstCol).as("edst"))
       .where($"esrc" =!= $"edst").distinct()
     val ce = e
-      .join(lab.select($"node".as("esrc"), $"scc".as("s")), "esrc")
-      .join(lab.select($"node".as("edst"), $"scc".as("d")), "edst")
+      .join(lab.frame.select($"node".as("esrc"), $"scc".as("s")), "esrc")
+      .join(lab.frame.select($"node".as("edst"), $"scc".as("d")), "edst")
       .where($"s" =!= $"d").select($"s", $"d").distinct()
-    var (rem, remRdd, nRem) = pinC(CheckpointOps.checkpointCountTruncated(
-      lab.select($"scc").distinct()))
-    var (remE, remERdd) = pin(CheckpointOps.checkpointTruncated(ce))
+    var rem = pin(lab.frame.select($"scc").distinct())
+    var remE = pin(ce)
     // condensation materialized: the labels AND the scc run's own
     // settled frames behind them are dead state now — free both
     // (leaving them pinned is the deferred-cleanup inflation
     // CheckpointOps documents)
-    unpin(labRdd)
-    sccRdds.foreach(unpin)
+    pin.unpin(lab)
+    sccFrames.foreach(pin.unpin)
     val found = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val emptyOut = rem.select($"scc", lit(0).as("level")).where(lit(false))
+    val emptyOut =
+      rem.frame.select($"scc", lit(0).as("level")).where(lit(false))
     var level = 0
-    while (nRem > 0) {
-      val srcs = rem
-        .join(remE.select($"d".as("scc")).distinct(), Seq("scc"),
+    while (rem.rows > 0) {
+      val srcs = pin(rem.frame
+        .join(remE.frame.select($"d".as("scc")).distinct(), Seq("scc"),
           "left_anti")
-        .select($"scc", lit(level).as("level"))
-      val (srcsFlat, srcsRdd, nSrcs) =
-        pinC(CheckpointOps.checkpointCountTruncated(srcs))
+        .select($"scc", lit(level).as("level")))
       // impossible after SCC condensation (the DAG property); guards
       // an infinite peel if a caller feeds pre-labeled non-SCC input —
       // and frees every pinned round frame before throwing, like scc()
-      if (nSrcs == 0) {
-        pinned.foreach(_.unpersist(false))
-        pinned.clear()
-        throw new IllegalArgumentException(
-          s"topological peel found no sources with $nRem nodes left — " +
-            "the condensed graph has a cycle")
-      }
-      found += srcsFlat
-      val (nxt, nxtRdd, nNxt) = pinC(CheckpointOps.checkpointCountTruncated(
-        rem.join(srcsFlat.select($"scc"), Seq("scc"), "left_anti")))
-      val (nxtE, nxtERdd) = pin(CheckpointOps.checkpointTruncated(
-        remE.join(srcsFlat.select($"scc".as("s")), Seq("s"), "left_anti")))
-      unpin(remRdd)
-      unpin(remERdd)
+      if (srcs.rows == 0) pin.fail(
+        s"topological peel found no sources with ${rem.rows} nodes " +
+          "left — the condensed graph has a cycle")
+      found += srcs.frame
+      val nxt = pin(
+        rem.frame.join(srcs.frame.select($"scc"), Seq("scc"), "left_anti"))
+      val nxtE = pin(remE.frame
+        .join(srcs.frame.select($"scc".as("s")), Seq("s"), "left_anti"))
+      pin.unpin(rem)
+      pin.unpin(remE)
       rem = nxt
-      remRdd = nxtRdd
-      nRem = nNxt
       remE = nxtE
-      remERdd = nxtERdd
       level += 1
     }
-    unpin(remRdd)
-    unpin(remERdd)
+    pin.unpin(rem)
+    pin.unpin(remE)
     found.foldLeft(emptyOut)(_ unionByName _)
   }
-
-  private type RDD =
-    org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]
 
   /** Connected components when a partition column is KNOWN to bound every
     * component — e.g. the reference's per-city ER blocking

@@ -1,10 +1,8 @@
 package graft.operators
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.CheckpointOps
+import org.apache.spark.sql.graft.{CheckpointOps, Materialized}
 
 /** Storage backend for STANDING incremental-HyperBall state: per-hop
   * stacks of append-only register frames plus the standing edge set.
@@ -40,10 +38,11 @@ private[graft] trait HbRegStore {
   /** Hop-0 nodes present among the (batch-bounded) key nodes. */
   def seen0Nodes(keys: DataFrame): DataFrame
 
-  /** Append a MATERIALIZED (checkpointed) delta frame to hop h's
-    * standing stack. Each appended frame is node-unique (they are all
-    * groupBy/distinct outputs), but nodes repeat ACROSS frames. */
-  def appendDelta(h: Int, delta: DataFrame, rdd: RDD[InternalRow]): Unit
+  /** Append a materialized delta frame to hop h's standing stack; the
+    * store owns its blocks from here on. Each appended frame is
+    * node-unique (they are all groupBy/distinct outputs), but nodes
+    * repeat ACROSS frames. */
+  def appendDelta(h: Int, delta: Materialized): Unit
 
   /** Append a materialized edge frame to the standing edge set. */
   def appendEdges(e: DataFrame): Unit
@@ -67,20 +66,31 @@ private[graft] trait HbRegStore {
     * top stack — the lazy-hop move of the adaptive saturation stop.
     * Chains the raw top frame when the stack has exactly one (the
     * initial-load case: identical plan to the fixed-hop rebuild). */
-  def growHop(): Unit
+  final def growHop(): Unit =
+    appendDelta(maxHop + 1, CheckpointOps.materialize(
+      PageRank.packedPropagateRound(allEdges, resolved(maxHop), 1 << p),
+      truncate = true))
 
   /** [[growHop]] that also returns the new hop's quantized global
     * ball-sum Σ_v ⌊N̂(v)·1e6 + 0.5⌋, summed by the materializing pass
-    * itself ([[org.apache.spark.sql.graft.CheckpointOps.checkpointSum]]
+    * itself ([[org.apache.spark.sql.graft.CheckpointOps.materialize]]
     * over [[PageRank.packedRegsWithQ]]) — the adaptive stop's per-hop
     * scalar without a second scan of the frame the round just wrote. */
-  def growHopQ(): Long
+  final def growHopQ(): Long = {
+    val m = 1 << p
+    val next = CheckpointOps.materialize(
+      PageRank.packedRegsWithQ(
+        PageRank.packedPropagateRound(allEdges, resolved(maxHop), m), m),
+      truncate = true, sum = Some(2)).select(col("node"), col("regs"))
+    appendDelta(maxHop + 1, next)
+    next.sum.get
+  }
 
-  /** Track a batch/init-local materialized RDD (edge frames, empty
+  /** Track a batch/init-local materialized frame (edge frames, empty
     * deltas) that is DEAD once the last fold lands — freed by
     * [[close]], so a long-lived session doesn't accumulate
     * corpus-scale blocks that nothing will read again. */
-  def trackTransient(rdd: RDD[InternalRow]): Unit
+  def trackTransient(frame: Materialized): Unit
 
   /** Free every transient block. Standing register frames (the live
     * state backing [[resolved]]) are NOT touched. Call after the last
@@ -98,9 +108,9 @@ private[graft] final class InMemoryHbRegStore(
   private var frames = Vector.empty[Vector[DataFrame]]
   private var edgeFrames = Vector.empty[DataFrame]
   private val transients =
-    scala.collection.mutable.ArrayBuffer.empty[RDD[InternalRow]]
-  private val frameRdds =
-    scala.collection.mutable.ArrayBuffer.empty[RDD[InternalRow]]
+    scala.collection.mutable.ArrayBuffer.empty[Materialized]
+  private val standing =
+    scala.collection.mutable.ArrayBuffer.empty[Materialized]
 
   def maxHop: Int = frames.size - 1
 
@@ -123,10 +133,10 @@ private[graft] final class InMemoryHbRegStore(
     else probed.reduce(_ union _).select(col("node")).distinct()
   }
 
-  def appendDelta(h: Int, delta: DataFrame, rdd: RDD[InternalRow]): Unit = {
-    frameRdds += rdd
-    if (h == frames.size) frames :+= Vector(delta)
-    else frames = frames.updated(h, frames(h) :+ delta)
+  def appendDelta(h: Int, delta: Materialized): Unit = {
+    standing += delta
+    if (h == frames.size) frames :+= Vector(delta.frame)
+    else frames = frames.updated(h, frames(h) :+ delta.frame)
   }
 
   def appendEdges(e: DataFrame): Unit = edgeFrames :+= e
@@ -146,24 +156,10 @@ private[graft] final class InMemoryHbRegStore(
     else frames(h).reduce(_ unionByName _)
       .groupBy(col("node")).agg(mergeRegs(col("regs")).as("regs"))
 
-  def growHop(): Unit = {
-    val (next, nextRdd) = CheckpointOps.checkpointTruncated(
-      PageRank.packedPropagateRound(allEdges, resolved(maxHop), m))
-    appendDelta(maxHop + 1, next, nextRdd)
-  }
-
-  def growHopQ(): Long = {
-    val (nextQ, nextRdd, q) = CheckpointOps.checkpointSumTruncated(
-      PageRank.packedRegsWithQ(
-        PageRank.packedPropagateRound(allEdges, resolved(maxHop), m), m), 2)
-    appendDelta(maxHop + 1, nextQ.select(col("node"), col("regs")), nextRdd)
-    q
-  }
-
-  def trackTransient(rdd: RDD[InternalRow]): Unit = transients += rdd
+  def trackTransient(frame: Materialized): Unit = transients += frame
 
   def close(): Unit = {
-    transients.foreach(_.unpersist(false))
+    transients.foreach(_.release())
     transients.clear()
   }
 
@@ -172,8 +168,8 @@ private[graft] final class InMemoryHbRegStore(
     * ever resolve the frames again. */
   def closeAll(): Unit = {
     close()
-    frameRdds.foreach(_.unpersist(false))
-    frameRdds.clear()
+    standing.foreach(_.release())
+    standing.clear()
     frames = Vector.empty
     edgeFrames = Vector.empty
   }
@@ -192,16 +188,16 @@ private[graft] object HyperBallState {
   def init(store: HbRegStore, initialEdges: DataFrame, maxHops: Int,
            srcCol: String, dstCol: String): Unit = {
     val e0 = initEdges(store, initialEdges, srcCol, dstCol)
-    val (r0, r0Rdd) = CheckpointOps.checkpointTruncated(
+    store.appendDelta(0, CheckpointOps.materialize(
       PageRank.packedInitRegs(
-        e0.select(col("src").as("node")).distinct(), store.p))
-    store.appendDelta(0, r0, r0Rdd)
+        e0.select(col("src").as("node")).distinct(), store.p),
+      truncate = true))
     for (_ <- 1 to maxHops) store.growHop()
   }
 
   /** [[init]] that also returns every hop's quantized global ball-sum
     * (Σ_v ⌊N̂_h(v)·1e6 + 0.5⌋ for h = 0..maxHops), each summed by its
-    * frame's own materializing pass ([[CheckpointOps.checkpointSum]] /
+    * frame's own materializing pass ([[CheckpointOps.materialize]] /
     * [[HbRegStore.growHopQ]]) — the adaptive consumer's starting sums
     * WITHOUT a corpus-wide re-scan of the frames the init just wrote.
     * Long addition is order-free, so the vector is bit-identical to
@@ -209,23 +205,24 @@ private[graft] object HyperBallState {
   def initQ(store: HbRegStore, initialEdges: DataFrame, maxHops: Int,
             srcCol: String, dstCol: String): Vector[Long] = {
     val e0 = initEdges(store, initialEdges, srcCol, dstCol)
-    val (r0Q, r0Rdd, q0) = CheckpointOps.checkpointSumTruncated(
+    val r0 = CheckpointOps.materialize(
       PageRank.packedRegsWithQ(PageRank.packedInitRegs(
         e0.select(col("src").as("node")).distinct(), store.p), 1 << store.p),
-      2)
-    store.appendDelta(0, r0Q.select(col("node"), col("regs")), r0Rdd)
-    var qs = Vector(q0)
+      truncate = true, sum = Some(2)).select(col("node"), col("regs"))
+    store.appendDelta(0, r0)
+    var qs = Vector(r0.sum.get)
     for (_ <- 1 to maxHops) qs :+= store.growHopQ()
     qs
   }
 
   private def initEdges(store: HbRegStore, initialEdges: DataFrame,
                         srcCol: String, dstCol: String): DataFrame = {
-    val (e0, e0Rdd) = CheckpointOps.checkpointTruncated(
-      initialEdges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
-    store.trackTransient(e0Rdd)
-    store.appendEdges(e0)
-    e0
+    val e0 = CheckpointOps.materialize(
+      initialEdges.select(col(srcCol).as("src"), col(dstCol).as("dst")),
+      truncate = true)
+    store.trackTransient(e0)
+    store.appendEdges(e0.frame)
+    e0.frame
   }
 
   /** Fold one edge batch into the standing state by monotone delta
@@ -261,9 +258,11 @@ private[graft] object HyperBallState {
                 trackQ: Boolean = false): Vector[Long] = {
     val m = 1 << store.p
     val mergeRegs = udaf(new RegisterMaxMerge(m))
-    val (newE, newERdd) = CheckpointOps.checkpointTruncated(
-      batch.select(col(srcCol).as("src"), col(dstCol).as("dst")))
-    store.trackTransient(newERdd)
+    val newEM = CheckpointOps.materialize(
+      batch.select(col(srcCol).as("src"), col(dstCol).as("dst")),
+      truncate = true)
+    store.trackTransient(newEM)
+    val newE = newEM.frame
     // new SRC nodes seed hop-0 sketches — hop-0 presence is "has an
     // out-edge" (the rebuild's n0 node set); a node already known as a
     // pure dst still seeds here, and its self-sketch then carries up
@@ -272,41 +271,35 @@ private[graft] object HyperBallState {
     // old-register resolve all consume it — left lazy, the distinct
     // shuffle re-executes in each of those jobs (batch-local, freed on
     // close)
-    val (srcNodes, srcNodesRdd) = CheckpointOps.checkpointTruncated(
-      newE.select(col("src").as("node")).distinct())
-    store.trackTransient(srcNodesRdd)
+    val srcNodesM = CheckpointOps.materialize(
+      newE.select(col("src").as("node")).distinct(), truncate = true)
+    store.trackTransient(srcNodesM)
+    val srcNodes = srcNodesM.frame
     val seen0 = store.seen0Nodes(srcNodes)
     // hop-0 delta: new nodes only (anti-join), so q_old = 0 and the
     // tracked sum delta is just Σ q(self-sketch)
     val d0Plan = PageRank.packedInitRegs(
       srcNodes.join(broadcast(seen0), Seq("node"), "left_anti"), store.p)
-    val (d0, d0Rdd, n0New, q0Delta) =
-      if (trackQ)
-        CheckpointOps.checkpointCountSumTruncated(
-          PageRank.packedRegsWithQ(d0Plan, m), 2) match {
-          case (f, rdd, n, s) =>
-            (f.select(col("node"), col("regs")), rdd, n, s)
-        }
-      else CheckpointOps.checkpointCountTruncated(d0Plan) match {
-        case (f, rdd, n) => (f, rdd, n, 0L)
-      }
-    if (n0New > 0) store.appendDelta(0, d0, d0Rdd)
-    else store.trackTransient(d0Rdd)
+    val d0 = materializeDelta(
+      if (trackQ) PageRank.packedRegsWithQ(d0Plan, m) else d0Plan, trackQ)
+    if (d0.rows > 0) store.appendDelta(0, d0)
+    else store.trackTransient(d0)
     store.appendEdges(newE)
-    var qDeltas = Vector(q0Delta)
-    var deltaPrev = d0 // empty when n0New == 0 — still a valid frame
+    var qDeltas = Vector(d0.sum.getOrElse(0L))
+    var deltaPrev = d0.frame // empty when no node is new — still valid
     for (h <- 1 to store.maxHop) {
       val viaDelta = store.propagateAlong(deltaPrev)
       val srcRegs = store.resolveFor(h - 1, srcNodes)
       val viaNewE = newE
         .join(broadcast(srcRegs.withColumnRenamed("node", "src")), "src")
         .select(col("dst").as("node"), col("regs"))
-      val (cand, candRdd) = CheckpointOps.checkpointTruncated(
+      val cand = CheckpointOps.materialize(
         viaDelta.union(viaNewE).union(deltaPrev)
-          .groupBy(col("node")).agg(mergeRegs(col("regs")).as("regs")))
-      val old = store.resolveFor(h, cand.select(col("node")))
+          .groupBy(col("node")).agg(mergeRegs(col("regs")).as("regs")),
+        truncate = true)
+      val old = store.resolveFor(h, cand.frame.select(col("node")))
         .withColumnRenamed("regs", "old_regs")
-      val merged = cand.join(old, Seq("node"), "left")
+      val merged = cand.frame.join(old, Seq("node"), "left")
         .select(col("node"),
           when(col("old_regs").isNull, col("regs"))
             .otherwise(zip_with(col("regs"), col("old_regs"),
@@ -314,31 +307,33 @@ private[graft] object HyperBallState {
           col("old_regs"))
       val changed = merged.where(col("old_regs").isNull ||
         !(col("regs") <=> col("old_regs")))
-      val (dh, dhRdd, nCh, qhDelta) =
-        if (trackQ)
-          CheckpointOps.checkpointCountSumTruncated(
-            changed.select(col("node"), col("regs"),
-              (PageRank.packedQExpr(col("regs"), m) -
-                coalesce(PageRank.packedQExpr(col("old_regs"), m),
-                  lit(0L))).as("qd")), 2) match {
-            case (f, rdd, n, s) =>
-              (f.select(col("node"), col("regs")), rdd, n, s)
-          }
-        else CheckpointOps.checkpointCountTruncated(
-          changed.select(col("node"), col("regs"))) match {
-          case (f, rdd, n) => (f, rdd, n, 0L)
-        }
+      val dh = materializeDelta(
+        if (trackQ) changed.select(col("node"), col("regs"),
+          (PageRank.packedQExpr(col("regs"), m) -
+            coalesce(PageRank.packedQExpr(col("old_regs"), m),
+              lit(0L))).as("qd"))
+        else changed.select(col("node"), col("regs")), trackQ)
       // cand is dead the moment the delta lands (its consumers — the
       // old-register probe and the merge — all ran inside dh's
       // materialization); free it instead of leaving maxHops × batches
       // ball-sized frames to GC
-      candRdd.unpersist(false)
-      if (nCh > 0) store.appendDelta(h, dh, dhRdd)
-      else store.trackTransient(dhRdd)
-      qDeltas :+= qhDelta
-      deltaPrev = dh
+      cand.release()
+      if (dh.rows > 0) store.appendDelta(h, dh)
+      else store.trackTransient(dh)
+      qDeltas :+= dh.sum.getOrElse(0L)
+      deltaPrev = dh.frame
     }
     qDeltas
+  }
+
+  /** One fold delta, lineage-truncated. With `trackQ` the plan carries
+    * the q delta as column 2, summed by the same pass and projected off
+    * the stored frame; without it the plan is materialized verbatim. */
+  private def materializeDelta(plan: DataFrame,
+                               trackQ: Boolean): Materialized = {
+    val d = CheckpointOps.materialize(plan, truncate = true,
+      sum = Option.when(trackQ)(2))
+    if (trackQ) d.select(col("node"), col("regs")) else d
   }
 
   /** The RESOLVED per-hop estimate frames (node, n$h) off a standing

@@ -1,11 +1,9 @@
 package graft.operators
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.CheckpointOps
+import org.apache.spark.sql.graft.{CheckpointOps, Materialized}
 import org.apache.spark.storage.StorageLevel
 
 /** Power-iteration PageRank over an edge DataFrame — the second iterative
@@ -118,55 +116,54 @@ object PageRank {
     import spark.implicits._
 
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val (nodes, nodesRdd) = CheckpointOps.checkpoint(
+    val nodes = CheckpointOps.materialize(
       e.select($"src".as("node")).union(e.select($"dst".as("node"))).distinct())
     // out-degree rides with each edge so a round is select+shuffle, no join
-    val (outEdges, outEdgesRdd) = CheckpointOps.checkpoint(
+    val outEdges = CheckpointOps.materialize(
       e.join(e.groupBy($"src").agg(count(lit(1)).as("deg")), Seq("src")))
     // dangling = appears only as dst; tiny (node) set, computed once
-    val (dangling, danglingRdd) =
-      if (!redistributeDangling) (null: DataFrame, null)
-      else CheckpointOps.checkpoint(
-        nodes.join(e.select($"src".as("node")).distinct(),
-          Seq("node"), "left_anti"))
+    val dangling = Option.when(redistributeDangling)(
+      CheckpointOps.materialize(
+        nodes.frame.join(e.select($"src".as("node")).distinct(),
+          Seq("node"), "left_anti")))
 
-    val nNodes = nodes.count().toDouble
+    val nNodes = nodes.rows.toDouble
     val teleport = (1.0 - damping) / nNodes
-    var (ranks, ranksRdd) = CheckpointOps.checkpoint(
-      nodes.select($"node", lit(1.0 / nNodes).as("rank")))
+    var ranks = CheckpointOps.materialize(
+      nodes.frame.select($"node", lit(1.0 / nNodes).as("rank")))
     var iter = 0
     while (iter < iterations) {
-      val contribs = outEdges
-        .join(ranks.select($"node".as("src"), $"rank"), "src")
+      val contribs = outEdges.frame
+        .join(ranks.frame.select($"node".as("src"), $"rank"), "src")
         .groupBy($"dst".as("node"))
         .agg(sum($"rank" / $"deg").as("in_mass"))
-      val next = if (!redistributeDangling) {
-        nodes.join(contribs, Seq("node"), "left")
-          .select($"node",
-            (lit(teleport) + lit(damping) * coalesce($"in_mass", lit(0.0)))
-              .as("rank"))
-      } else {
-        // one extra aggregate: the round's dangling mass, broadcast as a
-        // single row so the update stays one distributed expression
-        val dMass = ranks.join(dangling, Seq("node"), "left_semi")
-          .agg(coalesce(sum($"rank"), lit(0.0)).as("d_mass"))
-        nodes.join(contribs, Seq("node"), "left")
-          .crossJoin(broadcast(dMass))
-          .select($"node",
-            (lit(teleport) + lit(damping) *
-              (coalesce($"in_mass", lit(0.0)) + $"d_mass" / lit(nNodes)))
-              .as("rank"))
+      val next = dangling match {
+        case None =>
+          nodes.frame.join(contribs, Seq("node"), "left")
+            .select($"node",
+              (lit(teleport) + lit(damping) * coalesce($"in_mass", lit(0.0)))
+                .as("rank"))
+        case Some(d) =>
+          // one extra aggregate: the round's dangling mass, broadcast as
+          // a single row so the update stays one distributed expression
+          val dMass = ranks.frame.join(d.frame, Seq("node"), "left_semi")
+            .agg(coalesce(sum($"rank"), lit(0.0)).as("d_mass"))
+          nodes.frame.join(contribs, Seq("node"), "left")
+            .crossJoin(broadcast(dMass))
+            .select($"node",
+              (lit(teleport) + lit(damping) *
+                (coalesce($"in_mass", lit(0.0)) + $"d_mass" / lit(nNodes)))
+                .as("rank"))
       }
-      val (nextFlat, nextRdd) = CheckpointOps.checkpoint(next)
-      ranksRdd.unpersist(false)
-      ranks = nextFlat
-      ranksRdd = nextRdd
+      val nextRanks = CheckpointOps.materialize(next)
+      ranks.release()
+      ranks = nextRanks
       iter += 1
     }
-    nodesRdd.unpersist(false)
-    outEdgesRdd.unpersist(false)
-    if (danglingRdd != null) danglingRdd.unpersist(false)
-    ranks
+    nodes.release()
+    outEdges.release()
+    dangling.foreach(_.release())
+    ranks.frame
   }
 
   /** WEIGHTED PageRank: a node's rank splits over its out-edges in
@@ -188,33 +185,32 @@ object PageRank {
     import spark.implicits._
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
       col(weightCol).cast("double").as("w"))
-    val (nodes, nodesRdd) = CheckpointOps.checkpoint(
+    val nodes = CheckpointOps.materialize(
       e.select($"src".as("node")).union(e.select($"dst".as("node"))).distinct())
-    val (outEdges, outEdgesRdd) = CheckpointOps.checkpoint(
+    val outEdges = CheckpointOps.materialize(
       e.join(e.groupBy($"src").agg(sum($"w").as("wdeg")), Seq("src")))
-    val nNodes = nodes.count().toDouble
+    val nNodes = nodes.rows.toDouble
     val teleport = (1.0 - damping) / nNodes
-    var (ranks, ranksRdd) = CheckpointOps.checkpoint(
-      nodes.select($"node", lit(1.0 / nNodes).as("rank")))
+    var ranks = CheckpointOps.materialize(
+      nodes.frame.select($"node", lit(1.0 / nNodes).as("rank")))
     var iter = 0
     while (iter < iterations) {
-      val contribs = outEdges
-        .join(ranks.select($"node".as("src"), $"rank"), "src")
+      val contribs = outEdges.frame
+        .join(ranks.frame.select($"node".as("src"), $"rank"), "src")
         .groupBy($"dst".as("node"))
         .agg(sum($"rank" * $"w" / $"wdeg").as("in_mass"))
-      val next = nodes.join(contribs, Seq("node"), "left")
+      val next = nodes.frame.join(contribs, Seq("node"), "left")
         .select($"node",
           (lit(teleport) + lit(damping) * coalesce($"in_mass", lit(0.0)))
             .as("rank"))
-      val (nextFlat, nextRdd) = CheckpointOps.checkpoint(next)
-      ranksRdd.unpersist(false)
-      ranks = nextFlat
-      ranksRdd = nextRdd
+      val nextRanks = CheckpointOps.materialize(next)
+      ranks.release()
+      ranks = nextRanks
       iter += 1
     }
-    nodesRdd.unpersist(false)
-    outEdgesRdd.unpersist(false)
-    ranks
+    nodes.release()
+    outEdges.release()
+    ranks.frame
   }
 
   /** Personalized PageRank: the teleport (and dangling) mass restarts
@@ -236,53 +232,52 @@ object PageRank {
     val spark = edges.sparkSession
     import spark.implicits._
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val (nodes, nodesRdd) = CheckpointOps.checkpoint(
+    val nodes = CheckpointOps.materialize(
       e.select($"src".as("node")).union(e.select($"dst".as("node")))
         .distinct()
         .join(seeds.select($"node").distinct()
           .select($"node", lit(1.0).as("s")), Seq("node"), "left")
         .select($"node", coalesce($"s", lit(0.0)).as("s")))
-    val (outEdges, outEdgesRdd) = CheckpointOps.checkpoint(
+    val outEdges = CheckpointOps.materialize(
       e.join(e.groupBy($"src").agg(count(lit(1)).as("deg")), Seq("src")))
-    val (dangling, danglingRdd) = CheckpointOps.checkpoint(
-      nodes.select($"node").join(e.select($"src".as("node")).distinct(),
+    val dangling = CheckpointOps.materialize(
+      nodes.frame.select($"node").join(e.select($"src".as("node")).distinct(),
         Seq("node"), "left_anti"))
-    val nSeedsRow = nodes.agg(sum($"s")).head
+    val nSeedsRow = nodes.frame.agg(sum($"s")).head
     if (nSeedsRow.isNullAt(0)) {
       // empty edge set -> no nodes at all: the rank table is empty (the
       // same answer the SQL formulation gives), not an error
-      nodesRdd.unpersist(false)
-      outEdgesRdd.unpersist(false)
-      danglingRdd.unpersist(false)
-      return nodes.select($"node", $"s".as("rank"))
+      nodes.release()
+      outEdges.release()
+      dangling.release()
+      return nodes.frame.select($"node", $"s".as("rank"))
     }
     val nSeeds = nSeedsRow.getDouble(0)
     require(nSeeds > 0, "no seed is present in the graph")
-    var (ranks, ranksRdd) = CheckpointOps.checkpoint(
-      nodes.select($"node", ($"s" / nSeeds).as("rank")))
+    var ranks = CheckpointOps.materialize(
+      nodes.frame.select($"node", ($"s" / nSeeds).as("rank")))
     var iter = 0
     while (iter < iterations) {
-      val contribs = outEdges
-        .join(ranks.select($"node".as("src"), $"rank"), "src")
+      val contribs = outEdges.frame
+        .join(ranks.frame.select($"node".as("src"), $"rank"), "src")
         .groupBy($"dst".as("node"))
         .agg(sum($"rank" / $"deg").as("in_mass"))
-      val dMass = ranks.join(dangling, Seq("node"), "left_semi")
+      val dMass = ranks.frame.join(dangling.frame, Seq("node"), "left_semi")
         .agg(coalesce(sum($"rank"), lit(0.0)).as("d_mass"))
-      val next = nodes.join(contribs, Seq("node"), "left")
+      val next = nodes.frame.join(contribs, Seq("node"), "left")
         .crossJoin(broadcast(dMass))
         .select($"node",
           (($"s" / nSeeds) * (lit(1.0 - damping) + lit(damping) * $"d_mass")
             + lit(damping) * coalesce($"in_mass", lit(0.0))).as("rank"))
-      val (nextFlat, nextRdd) = CheckpointOps.checkpoint(next)
-      ranksRdd.unpersist(false)
-      ranks = nextFlat
-      ranksRdd = nextRdd
+      val nextRanks = CheckpointOps.materialize(next)
+      ranks.release()
+      ranks = nextRanks
       iter += 1
     }
-    nodesRdd.unpersist(false)
-    outEdgesRdd.unpersist(false)
-    danglingRdd.unpersist(false)
-    ranks
+    nodes.release()
+    outEdges.release()
+    dangling.release()
+    ranks.frame
   }
 
   /** HITS hubs & authorities (Kleinberg, JACM 46(5) 1999): mutual
@@ -307,12 +302,13 @@ object PageRank {
     require(iterations >= 1, "need at least one iteration")
     val spark = edges.sparkSession
     import spark.implicits._
-    val (e, eRdd) = CheckpointOps.checkpoint(
+    val em = CheckpointOps.materialize(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
-    val (nodes, nodesRdd) = CheckpointOps.checkpoint(
+    val e = em.frame
+    val nodes = CheckpointOps.materialize(
       e.select($"src".as("node")).union(e.select($"dst".as("node"))).distinct())
-    var (state, stateRdd) = CheckpointOps.checkpoint(
-      nodes.select($"node", lit(1.0).as("hub"), lit(0.0).as("auth")))
+    var state = CheckpointOps.materialize(
+      nodes.frame.select($"node", lit(1.0).as("hub"), lit(0.0).as("auth")))
     var iter = 0
     while (iter < iterations) {
       // each scatter result feeds multiple consumers (its normalizer
@@ -322,11 +318,12 @@ object PageRank {
       // (measured 6.9 s -> 2.9 s at sf0.1). The persisted frames are
       // node-sized; all are dropped once the round's checkpoint has
       // materialized.
-      val authRaw = e.join(state.select($"node".as("src"), $"hub"), "src")
+      val authRaw = e.join(state.frame.select($"node".as("src"), $"hub"),
+          "src")
         .groupBy($"dst".as("node")).agg(sum($"hub").as("raw"))
         .persist(StorageLevel.MEMORY_AND_DISK)
       val authNorm = authRaw.agg(sum($"raw").as("s"))
-      val auths = nodes.join(authRaw, Seq("node"), "left")
+      val auths = nodes.frame.join(authRaw, Seq("node"), "left")
         .crossJoin(broadcast(authNorm))
         .select($"node", (coalesce($"raw", lit(0.0)) / $"s").as("auth"))
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -334,24 +331,23 @@ object PageRank {
         .groupBy($"src".as("node")).agg(sum($"auth").as("raw"))
         .persist(StorageLevel.MEMORY_AND_DISK)
       val hubNorm = hubRaw.agg(sum($"raw").as("s"))
-      val next = nodes
+      val next = nodes.frame
         .join(hubRaw, Seq("node"), "left")
         .crossJoin(broadcast(hubNorm))
         .select($"node", (coalesce($"raw", lit(0.0)) / $"s").as("hub"))
         .join(auths, Seq("node"))
         .select($"node", $"hub", $"auth")
-      val (nextFlat, nextRdd) = CheckpointOps.checkpoint(next)
+      val nextState = CheckpointOps.materialize(next)
       authRaw.unpersist(false)
       auths.unpersist(false)
       hubRaw.unpersist(false)
-      stateRdd.unpersist(false)
-      state = nextFlat
-      stateRdd = nextRdd
+      state.release()
+      state = nextState
       iter += 1
     }
-    eRdd.unpersist(false)
-    nodesRdd.unpersist(false)
-    state
+    em.release()
+    nodes.release()
+    state.frame
   }
 
   /** The wedge set of the DEGREE-oriented graph: every undirected edge
@@ -448,16 +444,17 @@ object PageRank {
     // edge frame materialized once for the node init + every round
     // (the hyperBallHopEstimates rationale); labels are checkpoint-
     // backed, so the edge blocks free when the loop ends
-    val (e, eRdd) = CheckpointOps.checkpoint(
+    val em = CheckpointOps.materialize(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
-    val (nodes, nodesRdd) = CheckpointOps.checkpoint(
+    val e = em.frame
+    val nodes = CheckpointOps.materialize(
       e.select($"src".as("node")).union(e.select($"dst".as("node"))).distinct())
-    var (labels, labelsRdd) = CheckpointOps.checkpoint(
-      nodes.select($"node", $"node".as("label")))
+    var labels = CheckpointOps.materialize(
+      nodes.frame.select($"node", $"node".as("label")))
     var iter = 0
     while (iter < iterations) {
       val counts = e
-        .join(labels.select($"node".as("src"), $"label"), "src")
+        .join(labels.frame.select($"node".as("src"), $"label"), "src")
         .groupBy($"dst", $"label").agg(count(lit(1)).as("c"))
       // argmax(count) with min-label tiebreak, as one partial agg:
       // max over (c, -label) picks the largest count, then the most
@@ -466,17 +463,16 @@ object PageRank {
         .groupBy($"dst".as("node"))
         .agg(max(struct($"c", (-$"label").as("nl"))).as("m"))
         .select($"node", (-$"m.nl").as("label"))
-      val (nextFlat, nextRdd) = CheckpointOps.checkpoint(
-        nodes.join(next, Seq("node"), "left") // isolated dsts keep a row
+      val nextLabels = CheckpointOps.materialize(
+        nodes.frame.join(next, Seq("node"), "left") // isolated dsts keep a row
           .select($"node", coalesce($"label", $"node").as("label")))
-      labelsRdd.unpersist(false)
-      labels = nextFlat
-      labelsRdd = nextRdd
+      labels.release()
+      labels = nextLabels
       iter += 1
     }
-    eRdd.unpersist(false)
-    nodesRdd.unpersist(false)
-    labels
+    em.release()
+    nodes.release()
+    labels.frame
   }
 
   /** Multi-source BFS shortest hop distances, bounded at `maxHops`
@@ -501,25 +497,24 @@ object PageRank {
     // edge frame materialized once for the maxHops frontier joins (the
     // hyperBallHopEstimates rationale); the returned distances are
     // checkpoint-backed, so the edge blocks free on exit
-    val (e, eRdd) = CheckpointOps.checkpoint(
+    val e = CheckpointOps.materialize(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
-    var (dist, distRdd) = CheckpointOps.checkpoint(
+    var dist = CheckpointOps.materialize(
       sources.select($"node").distinct().select($"node", lit(0).as("dist")))
     var hop = 1
     while (hop <= maxHops) {
-      val frontier = dist.where($"dist" === (hop - 1)).select($"node")
-      val reached = e.join(frontier.select($"node".as("src")), "src")
+      val frontier = dist.frame.where($"dist" === (hop - 1)).select($"node")
+      val reached = e.frame.join(frontier.select($"node".as("src")), "src")
         .select($"dst".as("node"), lit(hop).as("dist"))
-      val next = dist.union(reached)
+      val next = dist.frame.union(reached)
         .groupBy($"node").agg(min($"dist").as("dist"))
-      val (nextFlat, nextRdd) = CheckpointOps.checkpoint(next)
-      distRdd.unpersist(false)
-      dist = nextFlat
-      distRdd = nextRdd
+      val nextDist = CheckpointOps.materialize(next)
+      dist.release()
+      dist = nextDist
       hop += 1
     }
-    eRdd.unpersist(false)
-    dist
+    e.release()
+    dist.frame
   }
 
   /** Bounded k-core peeling: `rounds` SYNCHRONOUS rounds of deleting
@@ -541,22 +536,21 @@ object PageRank {
     require(k >= 1 && rounds >= 1, "need k >= 1 and rounds >= 1")
     val spark = edges.sparkSession
     import spark.implicits._
-    var (e, eRdd) = CheckpointOps.checkpoint(
+    var e = CheckpointOps.materialize(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
     var round = 0
     while (round < rounds) {
-      val keep = e.groupBy($"src").agg(count(lit(1)).as("deg"))
+      val keep = e.frame.groupBy($"src").agg(count(lit(1)).as("deg"))
         .where($"deg" >= k).select($"src".as("node"))
-      val (e2, e2Rdd) = CheckpointOps.checkpoint(
-        e.join(keep.select($"node".as("src")), Seq("src"), "left_semi")
+      val e2 = CheckpointOps.materialize(
+        e.frame.join(keep.select($"node".as("src")), Seq("src"), "left_semi")
           .join(keep.select($"node".as("dst")), Seq("dst"), "left_semi")
           .select($"src", $"dst"))
-      eRdd.unpersist(false)
+      e.release()
       e = e2
-      eRdd = e2Rdd
       round += 1
     }
-    e.groupBy($"src".as("node")).agg(count(lit(1)).as("deg"))
+    e.frame.groupBy($"src".as("node")).agg(count(lit(1)).as("deg"))
   }
 
   /** Bounded-round single/multi-source shortest paths over WEIGHTED edges
@@ -585,36 +579,35 @@ object PageRank {
     import spark.implicits._
     // edge frame materialized once for the maxRounds relaxations (the
     // hyperBallHopEstimates rationale); distances are checkpoint-backed
-    val (e, eRdd) = CheckpointOps.checkpoint(
+    val e = CheckpointOps.materialize(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
         col(weightCol).cast("long").as("w")))
-    var (dist, distRdd) = CheckpointOps.checkpoint(
+    var dist = CheckpointOps.materialize(
       sources.select($"node").distinct()
         .select($"node", lit(0L).as("dist")))
-    var frontier = dist
+    var frontier = dist.frame
     var round = 1
     while (round <= maxRounds) {
-      val relax = e
+      val relax = e.frame
         .join(frontier.select($"node".as("src"), $"dist"), "src")
         .select($"dst".as("node"), ($"dist" + $"w").as("cand"))
         .groupBy($"node").agg(min($"cand").as("cand"))
       // full-outer min-merge: keep the improved flag so the next round
       // relaxes only nodes this round actually changed
-      val (merged, mergedRdd) = CheckpointOps.checkpoint(
-        dist.join(relax, Seq("node"), "full_outer")
+      val merged = CheckpointOps.materialize(
+        dist.frame.join(relax, Seq("node"), "full_outer")
           .select($"node",
             least(coalesce($"dist", $"cand"), coalesce($"cand", $"dist"))
               .as("dist"),
             ($"cand".isNotNull && ($"dist".isNull || $"cand" < $"dist"))
               .as("improved")))
-      distRdd.unpersist(false)
+      dist.release()
       dist = merged.select($"node", $"dist")
-      frontier = merged.where($"improved").select($"node", $"dist")
-      distRdd = mergedRdd
+      frontier = merged.frame.where($"improved").select($"node", $"dist")
       round += 1
     }
-    eRdd.unpersist(false)
-    dist
+    e.release()
+    dist.frame
   }
 
   /** EXACT bounded-radius harmonic centrality: for every node v with at
@@ -689,8 +682,9 @@ object PageRank {
     // hyperBallHopEstimates rationale); the returned state is a union
     // of checkpointed pair frames, so the edge blocks free on exit —
     // including the budget-trip error path (finally)
-    val (e, eRdd) = CheckpointOps.checkpoint(
+    val em = CheckpointOps.materialize(
       edges.select(col(srcCol).as("esrc"), col(dstCol).as("edst")))
+    val e = em.frame
     // FRONTIER-frame accumulation: each round materializes only the
     // newly-reached (src, node) pairs (first reach == min dist on an
     // unweighted graph); the cumulative state is the lazy union of the
@@ -698,37 +692,37 @@ object PageRank {
     // earlier cumulative re-checkpoint rewrote the whole state every
     // round (O(maxHops · state) write amplification, the dominant cost
     // of the exact legs at sf1).
-    val (seed, seedRdd, seedRows) = CheckpointOps.checkpointCount(
+    val seed = CheckpointOps.materialize(
       e.select($"esrc".as("src")).distinct()
         .select($"src", $"src".as("node"), lit(0).as("dist")))
-    var frameRdds = Vector[RDD[InternalRow]](seedRdd)
-    var total = seedRows
-    checkBudget(0, total, stateBudgetRows, frameRdds)
-    var state = seed
-    var frontier = seed
+    var frames = Vector(seed)
+    var total = seed.rows
+    checkBudget(0, total, stateBudgetRows, frames)
+    var state = seed.frame
+    var frontier = seed.frame
     var hop = 1
     try {
       while (hop <= maxHops && total > 0) {
         val step = e.join(frontier.select($"src", $"node".as("esrc")), "esrc")
           .select($"src", $"edst".as("node")).distinct()
-        val (fresh, freshRdd, n) = CheckpointOps.checkpointCount(
+        val fresh = CheckpointOps.materialize(
           step.join(state.select($"src", $"node"), Seq("src", "node"),
               "left_anti")
             .select($"src", $"node", lit(hop).as("dist")))
-        frameRdds :+= freshRdd
-        total += n
-        checkBudget(hop, total, stateBudgetRows, frameRdds)
-        if (n == 0) {
+        frames :+= fresh
+        total += fresh.rows
+        checkBudget(hop, total, stateBudgetRows, frames)
+        if (fresh.rows == 0) {
           // BFS exhausted early — no pair can appear at a later hop
-          freshRdd.unpersist(false)
+          fresh.release()
           hop = maxHops
         } else {
-          state = state.union(fresh)
-          frontier = fresh
+          state = state.union(fresh.frame)
+          frontier = fresh.frame
         }
         hop += 1
       }
-    } finally eRdd.unpersist(false)
+    } finally em.release()
     state
   }
 
@@ -737,13 +731,13 @@ object PageRank {
     * frame (nothing downstream will consume them) and raises the named
     * error. Checked AFTER each round lands — the count is the free
     * byproduct of the round's own materialization
-    * ([[CheckpointOps.checkpointCount]]), so the guard costs zero jobs;
-    * the round that crosses the line is the last one paid for. `rows`
-    * is the CUMULATIVE pair state across frames. */
+    * ([[Materialized.rows]]), so the guard costs zero jobs; the round
+    * that crosses the line is the last one paid for. `rows` is the
+    * CUMULATIVE pair state across frames. */
   private def checkBudget(round: Int, rows: Long, budget: Long,
-                          rdds: Seq[RDD[InternalRow]]): Unit =
+                          frames: Seq[Materialized]): Unit =
     if (rows > budget) {
-      rdds.foreach(_.unpersist(false))
+      frames.foreach(_.release())
       throw new CentralityStateBudgetExceeded(round, rows, budget,
         "use the sketch-state scale path (hyperBall / hyperBallPacked) " +
           "or shrink maxHops / the source sample.")
@@ -783,16 +777,17 @@ object PageRank {
     // consumer (measured: ~1 s per execution at sf0.1, maxHops+1
     // executions). The estimates only read the register checkpoints, so
     // the edge blocks free the moment the loop ends.
-    val (e, eRdd) = CheckpointOps.checkpoint(
+    val em = CheckpointOps.materialize(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
+    val e = em.frame
     val nodes = e.select($"src".as("node")).distinct()
     val (idx, rho) = Sketches.hllRegister(col("node").cast("string"), p)
     // every round's register table backs one of the per-round estimates
     // consumed in the final select, so (unlike the fixpoint loops) no
     // round is unpersisted early — total pinned state is bounded at
     // (maxHops+1) * m rows per node, KB-scale sketch state by design
-    var (regs, _) = CheckpointOps.checkpoint(
-      nodes.select($"node", idx.as("hll_idx"), rho.as("mj")))
+    var regs = CheckpointOps.materialize(
+      nodes.select($"node", idx.as("hll_idx"), rho.as("mj"))).frame
     def estimate(r: DataFrame, name: String): DataFrame =
       Sketches.hllEstimate(r, Seq("node"), p)
         .select($"node", col("hll_estimate").as(name))
@@ -801,14 +796,13 @@ object PageRank {
     while (hop <= maxHops) {
       val fromNeighbors = e.join(regs.withColumnRenamed("node", "src"), "src")
         .select($"dst".as("node"), $"hll_idx", $"mj")
-      val (next, _) = CheckpointOps.checkpoint(
+      regs = CheckpointOps.materialize(
         fromNeighbors.union(regs)
-          .groupBy($"node", $"hll_idx").agg(max($"mj").as("mj")))
-      regs = next
+          .groupBy($"node", $"hll_idx").agg(max($"mj").as("mj"))).frame
       ests :+= estimate(regs, s"n$hop")
       hop += 1
     }
-    eRdd.unpersist(false)
+    em.release()
     // fixed-order fold (n1−n0)/1 + (n2−n1)/2 + … so the IEEE result is
     // reproducible term-for-term by the oracle
     val joined = ests.reduce((a, b) => a.join(b, Seq("node")))
@@ -982,20 +976,19 @@ object PageRank {
     // graph build is a full extra input pass per hop. The estimate
     // frames read only the register checkpoints, so the edge blocks
     // free when the loop ends.
-    val (e, eRdd) = CheckpointOps.checkpoint(
+    val em = CheckpointOps.materialize(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
+    val e = em.frame
     val nodes = e.select($"src".as("node")).distinct()
-    var (regs, _) = CheckpointOps.checkpoint(packedInitRegs(nodes, p))
+    var regs = CheckpointOps.materialize(packedInitRegs(nodes, p)).frame
     var ests = Vector(packedEstimate(regs, "n0", m))
     var hop = 1
     while (hop <= maxHops) {
-      val (next, _) = CheckpointOps.checkpoint(
-        packedPropagateRound(e, regs, m))
-      regs = next
+      regs = CheckpointOps.materialize(packedPropagateRound(e, regs, m)).frame
       ests :+= packedEstimate(regs, s"n$hop", m)
       hop += 1
     }
-    eRdd.unpersist(false)
+    em.release()
     ests
   }
 
@@ -1061,7 +1054,7 @@ object PageRank {
   /** A register frame plus its floor-quantized per-node ball mass as a
     * long column — ONE copy of the quantization the adaptive stop sums
     * (fused into the materializing pass via
-    * [[org.apache.spark.sql.graft.CheckpointOps.checkpointSum]]), so
+    * [[org.apache.spark.sql.graft.CheckpointOps.materialize]]), so
     * the fused-sum paths cannot drift from the aggregate-job form the
     * oracles replay. */
   private[graft] def packedRegsWithQ(regsPlan: DataFrame,
@@ -1098,36 +1091,36 @@ object PageRank {
     // one materialization of the edge frame for the whole adaptive loop
     // (same rationale as hyperBallHopEstimates); everything returned is
     // driver-local longs, so the blocks free before returning
-    val (e, eRdd) = CheckpointOps.checkpoint(
+    val em = CheckpointOps.materialize(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
+    val e = em.frame
     val nodes = e.select($"src".as("node")).distinct()
     // each round lands with its quantized per-node ball mass as a long
     // column, summed BY the materializing pass itself
-    // (CheckpointOps.checkpointSum) — the separate per-hop qsum job was
+    // (CheckpointOps.materialize's `sum`) — the separate per-hop qsum job was
     // a second full scan of the register frame the round just wrote (a
     // corpus-wide register pass per hop at scale). The per-node terms
     // are the identical floor expression; long addition is order-free,
     // so the sums are bit-identical to the aggregate-job form the
     // oracle replays.
-    var (regsQ, regsRdd, q0) = CheckpointOps.checkpointSum(
-      packedRegsWithQ(packedInitRegs(nodes, p), m), 2)
-    var regs = regsQ.select($"node", $"regs")
-    var qs = Vector(q0)
+    def withQ(regsPlan: DataFrame): Materialized =
+      CheckpointOps.materialize(packedRegsWithQ(regsPlan, m), sum = Some(2))
+        .select($"node", $"regs")
+    var regs = withQ(packedInitRegs(nodes, p))
+    var qs = Vector(regs.sum.get)
     var hop = 1
     var stopped = qs(0) == 0L // no out-edge nodes at all: nothing to run
     while (hop <= hopCap && !stopped) {
-      val (nextQ, nextRdd, qh) = CheckpointOps.checkpointSum(
-        packedRegsWithQ(packedPropagateRound(e, regs, m), m), 2)
-      regsRdd.unpersist(false)
-      regs = nextQ.select($"node", $"regs")
-      regsRdd = nextRdd
-      qs :+= qh
+      val next = withQ(packedPropagateRound(e, regs.frame, m))
+      regs.release()
+      regs = next
+      qs :+= regs.sum.get
       stopped =
         (qs(hop) - qs(hop - 1)).toDouble < epsilon * qs(hop).toDouble
       hop += 1
     }
-    regsRdd.unpersist(false)
-    eRdd.unpersist(false)
+    regs.release()
+    em.release()
     qs
   }
 
@@ -1367,8 +1360,9 @@ object PageRank {
     // edge frame materialized once — both passes consume it every level
     // (2·maxHops−1 joins), and an un-materialized spatial-join edge plan
     // re-executes per consumer; freed on exit including the budget trip
-    val (e, eRdd) = CheckpointOps.checkpoint(
+    val em = CheckpointOps.materialize(
       edges.select(col(srcCol).as("esrc"), col(dstCol).as("edst")))
+    val e = em.frame
     try {
     // forward pass as HOP-INDEXED frontier frames (the pairHopDistances
     // discipline): round h materializes only the pairs first reached at
@@ -1376,30 +1370,28 @@ object PageRank {
     // cumulative state rewritten every round — and the backward pass
     // reads each level's frame directly instead of filtering the full
     // union per level.
-    val (seed, seedRdd, seedRows) = CheckpointOps.checkpointCount(
+    val seed = CheckpointOps.materialize(
       sources.select($"node").distinct()
         .select($"node".as("s"), $"node", lit(1L).as("sigma")))
     var frames = Vector(seed)
-    var frameRdds = Vector[RDD[InternalRow]](seedRdd)
-    var total = seedRows
-    checkBudget(0, total, stateBudgetRows, frameRdds)
-    var seen = seed.select($"s", $"node")
+    var total = seed.rows
+    checkBudget(0, total, stateBudgetRows, frames)
+    var seen = seed.frame.select($"s", $"node")
     var hop = 1
     while (hop <= maxHops) {
-      val frontier = frames(hop - 1)
+      val frontier = frames(hop - 1).frame
         .select($"s", $"node".as("esrc"), $"sigma")
       // σ of a node first reached at round h = Σ σ over its dist-(h−1)
       // predecessors (all final by round h−1) — integer-exact
       val cand = e.join(frontier, "esrc")
         .groupBy($"s", $"edst".as("node"))
         .agg(sum($"sigma").as("sigma"))
-      val (fresh, freshRdd, n) = CheckpointOps.checkpointCount(
+      val fresh = CheckpointOps.materialize(
         cand.join(seen, Seq("s", "node"), "left_anti"))
       frames :+= fresh
-      frameRdds :+= freshRdd
-      total += n
-      checkBudget(hop, total, stateBudgetRows, frameRdds)
-      seen = seen.union(fresh.select($"s", $"node"))
+      total += fresh.rows
+      checkBudget(hop, total, stateBudgetRows, frames)
+      seen = seen.union(fresh.frame.select($"s", $"node"))
       hop += 1
     }
     // backward: δ at the radius boundary is 0; each level pulls from the
@@ -1409,19 +1401,19 @@ object PageRank {
     // re-checkpointed per level and the superseded accumulator + the
     // consumed previous level free immediately — peak pinned state is
     // two accumulator copies during the handoff, not maxHops frames.
-    var delta = frames(maxHops)
-      .select($"s", $"node", lit(0.0).as("delta"))
-    var deltaRdd: RDD[InternalRow] = null
-    var (accum, accumRdd) = CheckpointOps.checkpoint(delta)
-    delta = accum
+    var accum = CheckpointOps.materialize(frames(maxHops).frame
+      .select($"s", $"node", lit(0.0).as("delta")))
+    // the level below's δ frame; the seed accumulator stands in for
+    // the radius boundary's (all-zero) δ
+    var delta: Option[Materialized] = None
     var level = maxHops - 1
     while (level >= 1) {
-      val v = frames(level)
+      val v = frames(level).frame
         .select($"s", $"node", $"sigma")
-      val w = frames(level + 1)
+      val w = frames(level + 1).frame
         .select($"s".as("ws"), $"node".as("wnode"), $"sigma".as("wsigma"))
-        .join(delta.select($"s".as("ws"), $"node".as("wnode"),
-          $"delta".as("wdelta")), Seq("ws", "wnode"))
+        .join(delta.getOrElse(accum).frame.select($"s".as("ws"),
+          $"node".as("wnode"), $"delta".as("wdelta")), Seq("ws", "wnode"))
       val contrib = v
         .join(e, $"node" === $"esrc")
         .join(w, $"s" === $"ws" && $"edst" === $"wnode")
@@ -1432,20 +1424,17 @@ object PageRank {
       val nextDelta = v.select($"s", $"node")
         .join(scored, Seq("s", "node"), "left_outer")
         .select($"s", $"node", coalesce($"acc", lit(0.0)).as("delta"))
-      val (flat, flatRdd) = CheckpointOps.checkpoint(nextDelta)
-      val (nextAccum, nextAccumRdd) =
-        CheckpointOps.checkpoint(accum.union(flat))
-      if (deltaRdd != null) deltaRdd.unpersist(false)
-      accumRdd.unpersist(false)
-      delta = flat
-      deltaRdd = flatRdd
+      val flat = CheckpointOps.materialize(nextDelta)
+      val nextAccum = CheckpointOps.materialize(accum.frame.union(flat.frame))
+      delta.foreach(_.release())
+      accum.release()
+      delta = Some(flat)
       accum = nextAccum
-      accumRdd = nextAccumRdd
       level -= 1 // level 0 (the source itself) never scores, so the
     }            // backward pass stops at level 1
-    if (deltaRdd != null) deltaRdd.unpersist(false)
-    accum.groupBy($"node").agg(sum($"delta").as("bc"))
-    } finally eRdd.unpersist(false)
+    delta.foreach(_.release())
+    accum.frame.groupBy($"node").agg(sum($"delta").as("bc"))
+    } finally em.release()
   }
 
   /** Common-neighbor link prediction over the undirected graph: for every
@@ -1731,15 +1720,15 @@ object PageRank {
     require(maxRounds >= 1, "maxRounds must be >= 1")
     val e = CacheScope.pin(edges.select(col("src"), col("dst"))
       .withColumn("w", lit(1L)))
-    val (lab, _, _) = fixpointWeighted(e, labels0, maxRounds)
+    val (lab, _) = fixpointWeighted(e, labels0, maxRounds)
     e.unpersist(false) // lab is checkpoint-backed; the edge pin is dead
-    lab
+    lab.frame
   }
 
   /** [[louvainMoveRoundWeighted]] iterated to a fixpoint (or
     * `maxRounds`) over an already-materialized weighted edge frame —
     * the [[org.apache.spark.sql.graft.CheckpointOps]] loop discipline:
-    * each round materializes through checkpointDiff (stats CAPPED —
+    * each round materializes with a fused diff (stats CAPPED —
     * `Dataset.localCheckpoint` carries origin stats forward, and a
     * per-round join tree over last round's checkpoint compounds
     * sizeInBytes DOUBLE-exponentially until stats estimation spends
@@ -1767,12 +1756,12 @@ object PageRank {
     * replays of further rounds are provable no-ops. Deterministic end
     * to end (seeded md5), oracle-replayable round by round.
     *
-    * @return (labels, blocks-handle, settled) — settled means the last
+    * @return (labels on their blocks, settled) — settled means the last
     *         round had zero PENDING moves (a real fixpoint), not just
     *         the round budget running out */
   private def fixpointWeighted(e: DataFrame, labels0: DataFrame,
-      maxRounds: Int): (DataFrame, RDD[InternalRow], Boolean) = {
-    var (lab, labRdd) = CheckpointOps.checkpoint(
+      maxRounds: Int): (Materialized, Boolean) = {
+    var lab = CheckpointOps.materialize(
       labels0.select(col("node"), col("label")))
     // round-invariant inputs computed ONCE: the per-node weighted
     // degree (pinned) and the Σw scalar (collected — 1 double), where
@@ -1785,7 +1774,7 @@ object PageRank {
     // entering rounds whose ΔQ would divide by zero.
     val m2v = e.agg(coalesce(sum(col("w")), lit(0L)).cast("double"))
       .head().getDouble(0)
-    if (m2v == 0.0) return (lab, labRdd, true)
+    if (m2v == 0.0) return (lab, true)
     val deg = CacheScope.pin(
       e.groupBy(col("src").as("node")).agg(sum(col("w")).as("ki")))
     var rounds = 0
@@ -1798,20 +1787,19 @@ object PageRank {
       // columns (node, old_label, want, new_label): the 1-vs-2 diff
       // counts nodes that WANT to move (pre-gate), accumulated during
       // the same materialization pass — zero proves the fixpoint
-      val (step, stepRdd, diff) = CheckpointOps.checkpointDiff(
-        louvainMoveCore(e, lab, deg, m2v)
+      val step = CheckpointOps.materialize(
+        louvainMoveCore(e, lab.frame, deg, m2v)
           .select(col("node"), col("old_label"),
             col("new_label").as("want"),
             when(gate, col("new_label")).otherwise(col("old_label"))
-              .as("new_label")), 1, 2)
-      pending = diff
+              .as("new_label")), diff = Some((1, 2)))
+      pending = step.diff.get
+      lab.release()
       lab = step.select(col("node"), col("new_label").as("label"))
-      labRdd.unpersist(false)
-      labRdd = stepRdd
       rounds += 1
     }
     deg.unpersist(false)
-    (lab, labRdd, pending == 0)
+    (lab, pending == 0)
   }
 
   /** Community contraction (Blondel phase 2): collapse each community
@@ -1866,30 +1854,30 @@ object PageRank {
                            maxLevels: Int = 3): DataFrame = {
     require(maxRounds >= 1 && maxLevels >= 1,
       "maxRounds and maxLevels must be >= 1")
-    var (g, gRdd) = CheckpointOps.checkpoint(
+    var g = CheckpointOps.materialize(
       edges.select(col("src"), col("dst"), col("w")))
-    var mapping: DataFrame = null // original node -> current community
-    var mapRdd: RDD[InternalRow] = null
+    // original node -> current community
+    var mapping: Option[Materialized] = None
     var curLabels = labels0.select(col("node"), col("label"))
     // a level's fix frame is still lazily referenced by the NEXT
     // level's start labels, so its blocks are released one level late —
     // after fixpointWeighted has eagerly checkpointed those labels
     // (its first action)
-    var pendingFixRdd: RDD[InternalRow] = null
+    var pendingFix: Option[Materialized] = None
     var level = 0
     var done = false
     while (level < maxLevels && !done) {
-      val (fix, fixRdd, settled) =
-        fixpointWeighted(g, curLabels, maxRounds)
-      if (pendingFixRdd != null) pendingFixRdd.unpersist(false)
-      val (newMapping, newMapRdd) = CheckpointOps.checkpoint(
-        if (mapping == null) fix
-        else mapping.select(col("node"), col("label").as("sn"))
+      val (fixM, settled) = fixpointWeighted(g.frame, curLabels, maxRounds)
+      val fix = fixM.frame
+      pendingFix.foreach(_.release())
+      val newMapping = CheckpointOps.materialize(mapping match {
+        case None => fix
+        case Some(mp) => mp.frame.select(col("node"), col("label").as("sn"))
           .join(fix.select(col("node").as("sn"), col("label")), "sn")
-          .select(col("node"), col("label")))
-      if (mapRdd != null) mapRdd.unpersist(false)
-      mapping = newMapping
-      mapRdd = newMapRdd
+          .select(col("node"), col("label"))
+      })
+      mapping.foreach(_.release())
+      mapping = Some(newMapping)
       // one job for both convergence counts, not two
       val cnt = fix.agg(count(lit(1)), countDistinct(col("label")))
         .head()
@@ -1902,19 +1890,18 @@ object PageRank {
       done = settled && nSuper == nNodes
       if (!done && level + 1 < maxLevels) {
         // eager: reads g + fix now
-        val (g2, g2Rdd) = CheckpointOps.checkpoint(contract(g, fix))
-        gRdd.unpersist(false)
+        val g2 = CheckpointOps.materialize(contract(g.frame, fix))
+        g.release()
         g = g2
-        gRdd = g2Rdd
         curLabels = fix.select(col("label")).distinct()
           .select(col("label").as("node"), col("label"))
       }
-      pendingFixRdd = fixRdd
+      pendingFix = Some(fixM)
       level += 1
     }
-    if (pendingFixRdd != null) pendingFixRdd.unpersist(false)
-    gRdd.unpersist(false)
-    mapping
+    pendingFix.foreach(_.release())
+    g.release()
+    mapping.get.frame
   }
 
   /** k-CORE: the maximal subgraph where every node keeps >= k
@@ -1941,35 +1928,31 @@ object PageRank {
   def kCore(edges: DataFrame, k: Int, maxRounds: Int = 20): DataFrame = {
     require(k >= 1 && maxRounds >= 1, "k and maxRounds must be >= 1")
     val e = CacheScope.pin(edges.select(col("src"), col("dst")))
-    var (nodes, nodesRdd) = CheckpointOps.checkpoint(
+    var nodes = CheckpointOps.materialize(
       e.select(col("src").as("node")).distinct())
-    var before = nodes.count()
     var rounds = 0
     var dropped = 1L
-    while (rounds < maxRounds && dropped > 0 && before > 0) {
+    while (rounds < maxRounds && dropped > 0 && nodes.rows > 0) {
       val deg = e
-        .join(nodes.select(col("node").as("src")), "src")
-        .join(nodes.select(col("node").as("dst")), "dst")
+        .join(nodes.frame.select(col("node").as("src")), "src")
+        .join(nodes.frame.select(col("node").as("dst")), "dst")
         .groupBy(col("src").as("node")).agg(count(lit(1)).as("d"))
-      val (next, nextRdd) = CheckpointOps.checkpoint(
+      val next = CheckpointOps.materialize(
         deg.where(col("d") >= k).select(col("node")))
-      val after = next.count()
-      dropped = before - after
-      before = after
-      nodesRdd.unpersist(false)
+      dropped = nodes.rows - next.rows
+      nodes.release()
       nodes = next
-      nodesRdd = nextRdd
       rounds += 1
     }
     // within-core degrees over the FINAL set (== the last round's deg
     // only at a true fixpoint, so recompute); checkpointed so the
     // returned frame owns its blocks and the pins below can release
-    val (out, _) = CheckpointOps.checkpoint(e
-      .join(nodes.select(col("node").as("src")), "src")
-      .join(nodes.select(col("node").as("dst")), "dst")
+    val out = CheckpointOps.materialize(e
+      .join(nodes.frame.select(col("node").as("src")), "src")
+      .join(nodes.frame.select(col("node").as("dst")), "dst")
       .groupBy(col("src").as("node"))
-      .agg(count(lit(1)).cast("long").as("core_deg")))
-    nodesRdd.unpersist(false)
+      .agg(count(lit(1)).cast("long").as("core_deg"))).frame
+    nodes.release()
     e.unpersist(false)
     out
   }
@@ -1997,18 +1980,18 @@ object PageRank {
     // edge frame materialized once — the neighbor index AND the walk
     // seed both read it (an un-materialized spatial-join edge plan
     // would execute twice); freed with the index once the steps land
-    val (e, eRdd) = CheckpointOps.checkpoint(
-      edges.select(col("src"), col("dst")))
+    val em = CheckpointOps.materialize(edges.select(col("src"), col("dst")))
+    val e = em.frame
     val w = Window.partitionBy("src").orderBy("dst")
     val nbr = CacheScope.pin(e
       .withColumn("rn", row_number().over(w) - 1)
       .withColumn("deg", count(lit(1)).over(Window.partitionBy("src"))))
-    var (cur, _) = CheckpointOps.checkpoint(
+    var cur = CheckpointOps.materialize(
       e.select(col("src").as("node")).distinct()
         .withColumn("walk",
           explode(sequence(lit(0), lit(walksPerNode - 1))))
         .select(col("node"), col("walk"), lit(0).as("step"),
-          col("node").as("visited")))
+          col("node").as("visited"))).frame
     val outs = scala.collection.mutable.ListBuffer(cur)
     var s = 1
     while (s <= length) {
@@ -2016,12 +1999,12 @@ object PageRank {
         concat(col("node").cast("string"), lit(":"),
           col("walk").cast("string"), lit(":"), lit(s.toString)),
         lit(seed)), col("deg"))
-      val (next, _) = CheckpointOps.checkpoint(cur
+      val next = CheckpointOps.materialize(cur
         .select(col("node"), col("walk"), col("visited").as("src"))
         .join(nbr, "src")
         .where(col("rn") === pick)
         .select(col("node"), col("walk"), lit(s).as("step"),
-          col("dst").as("visited")))
+          col("dst").as("visited"))).frame
       outs += next
       // every step frame is PART of the output, so its blocks stay
       // alive; the caller owns them all (blanket-clear or CacheScope
@@ -2030,7 +2013,7 @@ object PageRank {
       s += 1
     }
     nbr.unpersist(false)
-    eRdd.unpersist(false)
+    em.release()
     outs.reduce(_ unionByName _)
   }
 
@@ -2053,7 +2036,7 @@ object PageRank {
   def coreness(edges: DataFrame, maxRounds: Int = 30): DataFrame = {
     require(maxRounds >= 1, "maxRounds must be >= 1")
     val e = CacheScope.pin(edges.select(col("src"), col("dst")))
-    var (core, coreRdd) = CheckpointOps.checkpoint(
+    var core = CheckpointOps.materialize(
       e.groupBy(col("src").as("node"))
         .agg(count(lit(1)).cast("long").as("core")))
     // one H-index round as a PLAN over the current estimate — kept
@@ -2074,19 +2057,18 @@ object PageRank {
     var changed = 1L
     while (rounds < maxRounds && changed > 0) {
       val steps = math.min(2, maxRounds - rounds)
-      val hx = (1 to steps).foldLeft(core)((cur, _) => hRound(cur))
+      val hx = (1 to steps).foldLeft(core.frame)((cur, _) => hRound(cur))
       // (node, old, new): the fused diff counts changed nodes
-      val (step, stepRdd, diff) = CheckpointOps.checkpointDiff(
-        core.join(hx.select(col("node"), col("core").as("h")), "node")
-          .select(col("node"), col("core"), col("h")), 1, 2)
-      changed = diff
+      val step = CheckpointOps.materialize(
+        core.frame.join(hx.select(col("node"), col("core").as("h")), "node")
+          .select(col("node"), col("core"), col("h")), diff = Some((1, 2)))
+      changed = step.diff.get
+      core.release()
       core = step.select(col("node"), col("h").as("core"))
-      coreRdd.unpersist(false)
-      coreRdd = stepRdd
       rounds += steps
     }
     e.unpersist(false)
-    core
+    core.frame
   }
 }
 

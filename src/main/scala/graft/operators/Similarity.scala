@@ -147,7 +147,7 @@ object Similarity {
     val b = CacheScope.pin(
       srpBucketed(emb, idCol, vecCol, numPlanes, tables)
         .select(col("table"), col("bucket"), col("id")))
-    var (lists, listsRdd) = CheckpointOps.checkpoint(scoreAndKeep(
+    var lists = CheckpointOps.materialize(scoreAndKeep(
       b.select(col("table"), col("bucket"), col("id").as("q_id"))
         .join(b.select(col("table"), col("bucket"),
           col("id").as("c_id")), Seq("table", "bucket"))
@@ -158,30 +158,29 @@ object Similarity {
     while (r < rounds) {
       // k-capped reverse lists keep hub in-degrees from exploding the
       // local join (the paper's reverse-sampling, made deterministic)
-      val rev = topKPerQuery(lists.select(col("c_id").as("q_id"),
+      val rev = topKPerQuery(lists.frame.select(col("c_id").as("q_id"),
         col("q_id").as("c_id"), col("cosine")), "cosine", k)
       // the undirected list graph feeds BOTH sides of the local join —
       // pinned, its reverse-top-k aggregation runs once per round, not
       // twice (freed after the round's lists land)
       val und = CacheScope.pin(
-        lists.select(col("q_id").as("a"), col("c_id").as("b"))
+        lists.frame.select(col("q_id").as("a"), col("c_id").as("b"))
           .unionByName(rev.select(col("q_id").as("a"), col("c_id").as("b")))
           .distinct())
       val cand = und
         .join(und.select(col("a").as("b"), col("b").as("c")), "b")
         .where(col("a") =!= col("c"))
         .select(col("a").as("q_id"), col("c").as("c_id"))
-        .unionByName(lists.select("q_id", "c_id"))
+        .unionByName(lists.frame.select("q_id", "c_id"))
         .distinct()
-      val (next, nextRdd) = CheckpointOps.checkpoint(scoreAndKeep(cand))
+      val next = CheckpointOps.materialize(scoreAndKeep(cand))
       und.unpersist(false)
-      listsRdd.unpersist(false)
+      lists.release()
       lists = next
-      listsRdd = nextRdd
       r += 1
     }
     v.unpersist(false)
-    lists.select(col("q_id").as("id"), col("c_id").as("nbr_id"),
+    lists.frame.select(col("q_id").as("id"), col("c_id").as("nbr_id"),
       (floor(col("cosine") * 1e6 + 0.5) / 1e6).as("cosine"), col("rank"))
   }
 

@@ -1,10 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Materialized
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.{ConnectedComponents, HbRegStore, HyperBallAdaptive,
@@ -362,7 +361,7 @@ object HbStream {
       pathRoot: String, numBuckets: Int) extends HbRegStore {
     private val cap = ConnectedComponents.MaxPointLookupNodes
     private val transients =
-      scala.collection.mutable.ArrayBuffer.empty[RDD[InternalRow]]
+      scala.collection.mutable.ArrayBuffer.empty[Materialized]
     private val m = 1 << p
     private val mergeRegs = udaf(new RegisterMaxMerge(m))
 
@@ -425,18 +424,17 @@ object HbStream {
       probe(regsTable(prefix, 0), "node", keys)
         .select(col("node")).distinct()
 
-    def appendDelta(h: Int, delta: DataFrame,
-                    rdd: RDD[InternalRow]): Unit = {
-      transients += rdd
+    def appendDelta(h: Int, delta: Materialized): Unit = {
+      transients += delta
       val t = regsTable(prefix, h)
       if (spark.catalog.tableExists(t)) {
-        delta.write.mode("append").insertInto(t)
+        delta.frame.write.mode("append").insertInto(t)
         createdRegs.remove(h)
       } else {
         require(pathRoot != null,
           s"register table $t missing — run HbStream.init first")
-        writeRegsTable(delta, t, s"$pathRoot/regs_h$h", numBuckets)
-        createdRegs(h) = delta
+        writeRegsTable(delta.frame, t, s"$pathRoot/regs_h$h", numBuckets)
+        createdRegs(h) = delta.frame
       }
       if (h > topHop) topHop = h
     }
@@ -469,28 +467,10 @@ object HbStream {
         spark.table(regsTable(prefix, h))
           .groupBy(col("node")).agg(mergeRegs(col("regs")).as("regs")))
 
-    def growHop(): Unit = {
-      val (next, nextRdd) =
-        org.apache.spark.sql.graft.CheckpointOps.checkpointTruncated(
-          PageRank.packedPropagateRound(allEdges, resolved(maxHop), m))
-      appendDelta(maxHop + 1, next, nextRdd)
-    }
-
-    def growHopQ(): Long = {
-      val (nextQ, nextRdd, q) =
-        org.apache.spark.sql.graft.CheckpointOps.checkpointSumTruncated(
-          PageRank.packedRegsWithQ(
-            PageRank.packedPropagateRound(allEdges, resolved(maxHop), m),
-            m), 2)
-      appendDelta(maxHop + 1, nextQ.select(col("node"), col("regs")),
-        nextRdd)
-      q
-    }
-
-    def trackTransient(rdd: RDD[InternalRow]): Unit = transients += rdd
+    def trackTransient(frame: Materialized): Unit = transients += frame
 
     def close(): Unit = {
-      transients.foreach(_.unpersist(false))
+      transients.foreach(_.release())
       transients.clear()
     }
   }

@@ -106,23 +106,21 @@ object CcIngestProbe {
       val batches = (0 until 3).map(i => edges.where(k === i).limit(1000))
       if (want("fold")) {
       val t0full = System.nanoTime()
-      val (base0, _) = CheckpointOps.checkpointTruncated(
-        ConnectedComponents.run(initial))
+      val base0 = CheckpointOps.materialize(
+        ConnectedComponents.run(initial), truncate = true).frame
       val tInit = sec(t0full)
       var frames = Vector(base0)
-      var (alias, aliasRdd) = CheckpointOps.checkpointTruncated(
+      var alias = CheckpointOps.materialize(
         base0.select($"component".as("c"), $"component".as("canon"))
-          .where(lit(false)))
+          .where(lit(false)), truncate = true)
       val stepWalls = batches.zipWithIndex.map { case (b, i) =>
         val t0 = System.nanoTime()
         val (ins, na) = ConnectedComponents.incrementalMergeParts(
-          frames.reduce(_ unionByName _), alias, b)
-        val (insFlat, _) = CheckpointOps.checkpointTruncated(ins)
-        val (naFlat, naRdd) = CheckpointOps.checkpointTruncated(na)
-        aliasRdd.unpersist(false)
-        frames :+= insFlat
-        alias = naFlat
-        aliasRdd = naRdd
+          frames.reduce(_ unionByName _), alias.frame, b)
+        frames :+= CheckpointOps.materialize(ins, truncate = true).frame
+        val nextAlias = CheckpointOps.materialize(na, truncate = true)
+        alias.release()
+        alias = nextAlias
         sec(t0)
       }
       println(f"[cc-fold-step] $dir init=$tInit%.1fs perBatch=" +

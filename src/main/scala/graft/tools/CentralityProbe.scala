@@ -53,22 +53,21 @@ object CentralityProbe {
       // every previous round inside the final count, inflating probe
       // wall and GC pressure at sf1 (the HyperBallAB contamination
       // lesson, applied to the probe itself).
-      var (state, stateRdd) = CheckpointOps.checkpoint(
+      var state = CheckpointOps.materialize(
         bidir.select($"src".as("node")).distinct()
           .select($"node".as("s"), $"node", lit(0).as("dist")))
       for (hop <- 1 to 3) {
-        val frontier = state.where($"dist" === (hop - 1))
+        val frontier = state.frame.where($"dist" === (hop - 1))
           .select($"s", $"node".as("src"))
         val reached = bidir.join(frontier, "src")
           .select($"s", $"dst".as("node"), lit(hop).as("dist"))
-        val (next, nextRdd) = CheckpointOps.checkpoint(
-          state.union(reached)
+        val next = CheckpointOps.materialize(
+          state.frame.union(reached)
             .groupBy($"s", $"node").agg(min($"dist").as("dist")))
-        stateRdd.unpersist(false)
+        state.release()
         state = next
-        stateRdd = nextRdd
       }
-      val ballMass = state.count()
+      val ballMass = state.rows
       // registry rows run under the DEFAULT budget — at sf1's ball mass
       // the exact legs trip it (by design: the default is anchored to
       // the measured thrash point), which the probe reports as a
@@ -113,7 +112,7 @@ object CentralityProbe {
         val seeds = cust
           .where(pmod(col("c_custkey"), lit(rate)) === 1)
           .select(col("c_custkey").as("node"))
-        val mass = state.where(pmod($"s", lit(rate)) === 1).count()
+        val mass = state.frame.where(pmod($"s", lit(rate)) === 1).count()
         val t0 = System.nanoTime()
         // same guard as time(): at a scale where the sampled ball mass
         // crosses the default budget this trips — print the sentinel
@@ -163,7 +162,7 @@ object CentralityProbe {
         f"exact=$tExact%.2fs hyperball=$tBall%.2fs " +
         f"hyperballCloseness=$tBallCl%.2fs " +
         f"exploded=$tExpl%.2fs packed=$tPacked%.2fs")
-      stateRdd.unpersist(false)
+      state.release()
       bidir.unpersist()
       spark.sharedState.cacheManager.clearCache()
     }

@@ -60,27 +60,26 @@ object EdgePartProbe {
     def runLoop(tag: String, prep: DataFrame => DataFrame,
                 shape: Boolean): Double = {
       val t0 = System.nanoTime()
-      val (e, eRdd) = CheckpointOps.checkpoint(prep(
+      val em = CheckpointOps.materialize(prep(
         lattice.select(col("src"), col("dst"))))
+      val e = em.frame
       val nodes = e.select(col("src").as("node")).distinct()
-      var (regs, regsRdd) = CheckpointOps.checkpoint(
-        PageRank.packedInitRegs(nodes, p))
+      var regs = CheckpointOps.materialize(PageRank.packedInitRegs(nodes, p))
       for (r <- 1 to 3) {
         if (shape && r == 2) {
           // round 2: regs is a checkpointed frame, the steady state
           println(s"[edgepart] $tag round-2 plan: " +
-            planShape(PageRank.packedPropagateRound(e, regs, m)))
+            planShape(PageRank.packedPropagateRound(e, regs.frame, m)))
         }
-        val (next, nextRdd) = CheckpointOps.checkpoint(
-          PageRank.packedPropagateRound(e, regs, m))
-        regsRdd.unpersist(false)
+        val next = CheckpointOps.materialize(
+          PageRank.packedPropagateRound(e, regs.frame, m))
+        regs.release()
         regs = next
-        regsRdd = nextRdd
       }
-      PageRank.packedEstimate(regs, "est", m)
+      PageRank.packedEstimate(regs.frame, "est", m)
         .write.format("noop").mode("overwrite").save()
-      regsRdd.unpersist(false)
-      eRdd.unpersist(false)
+      regs.release()
+      em.release()
       (System.nanoTime() - t0) / 1e9
     }
 

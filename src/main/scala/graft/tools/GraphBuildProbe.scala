@@ -71,11 +71,11 @@ object GraphBuildProbe {
             (round(col("harmonic_est"), 4) + 0.0).as("harmonic_est")))
       }
       timed(s"hb_edges_ckpt rep$r") {
-        val (e, eRdd) = CheckpointOps.checkpoint(bidirExplode)
-        noop(PageRank.hyperBallPacked(e, maxHops = 3, p = 6)
+        val e = CheckpointOps.materialize(bidirExplode)
+        noop(PageRank.hyperBallPacked(e.frame, maxHops = 3, p = 6)
           .select(col("node"),
             (round(col("harmonic_est"), 4) + 0.0).as("harmonic_est")))
-        eRdd.unpersist(false)
+        e.release()
       }
     }
     spark.stop()

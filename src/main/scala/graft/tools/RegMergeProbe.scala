@@ -32,11 +32,11 @@ object RegMergeProbe {
     val p = 6
     val m = 1 << p
 
-    val (e, _) = CheckpointOps.checkpoint(
+    val e = CheckpointOps.materialize(
       bidirOf(SpatialJoins.gridSelfJoin(
           custPoints(spark, sfDir), "c_custkey", "lat", "lon",
           radiusM = 250.0)
-        .select(col("a_id").as("src"), col("b_id").as("dst"))))
+        .select(col("a_id").as("src"), col("b_id").as("dst")))).frame
     val nodes = e.select(col("src").as("node")).distinct()
 
     // column-max variant of PageRank.packedPropagateRound
@@ -54,18 +54,16 @@ object RegMergeProbe {
     }
 
     def runLoop(round: DataFrame => DataFrame): Unit = {
-      var (regs, regsRdd) = CheckpointOps.checkpoint(
-        PageRank.packedInitRegs(nodes, p))
+      var regs = CheckpointOps.materialize(PageRank.packedInitRegs(nodes, p))
       for (_ <- 1 to 3) {
-        val (next, nextRdd) = CheckpointOps.checkpoint(round(regs))
-        regsRdd.unpersist(false)
+        val next = CheckpointOps.materialize(round(regs.frame))
+        regs.release()
         regs = next
-        regsRdd = nextRdd
       }
       // consume the last round's estimate so both variants pay it
-      PageRank.packedEstimate(regs, "est", m)
+      PageRank.packedEstimate(regs.frame, "est", m)
         .write.format("noop").mode("overwrite").save()
-      regsRdd.unpersist(false)
+      regs.release()
     }
 
     def timed(name: String)(body: => Unit): Unit = {
@@ -80,17 +78,19 @@ object RegMergeProbe {
     runLoop(colMaxRound)
     // parity check once: same estimates from both layouts
     val udafEst = {
-      var (regs, _) = CheckpointOps.checkpoint(PageRank.packedInitRegs(nodes, p))
+      var regs = CheckpointOps.materialize(PageRank.packedInitRegs(nodes, p))
+        .frame
       for (_ <- 1 to 3) {
-        val (n2, _) = CheckpointOps.checkpoint(
-          PageRank.packedPropagateRound(e, regs, m)); regs = n2
+        regs = CheckpointOps.materialize(
+          PageRank.packedPropagateRound(e, regs, m)).frame
       }
       PageRank.packedEstimate(regs, "est", m)
     }
     val colEst = {
-      var (regs, _) = CheckpointOps.checkpoint(PageRank.packedInitRegs(nodes, p))
+      var regs = CheckpointOps.materialize(PageRank.packedInitRegs(nodes, p))
+        .frame
       for (_ <- 1 to 3) {
-        val (n2, _) = CheckpointOps.checkpoint(colMaxRound(regs)); regs = n2
+        regs = CheckpointOps.materialize(colMaxRound(regs)).frame
       }
       PageRank.packedEstimate(regs, "est", m)
     }

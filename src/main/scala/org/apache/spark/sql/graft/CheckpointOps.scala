@@ -1,7 +1,7 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap,
   Expression}
@@ -13,97 +13,117 @@ import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.storage.StorageLevel
 
+/** What one [[CheckpointOps.materialize]] pass produced: the frame on
+  * its persisted blocks, the row count of the persisting `count()`
+  * action, and the diff / sum scalars when they were asked for (None
+  * otherwise). The block handle stays private: [[release]] is the only
+  * way to free it, and a [[select]] view shares it. */
+final case class Materialized(frame: DataFrame, rows: Long,
+                              diff: Option[Long], sum: Option[Long])(
+    rdd: RDD[InternalRow]) {
+
+  /** Unpersist the blocks backing [[frame]] (and every [[select]] view
+    * of it). Non-blocking; the frame must not be read afterwards. */
+  def release(): Unit = rdd.unpersist(false)
+
+  /** The same blocks read through a projection — a pass that carried a
+    * helper column only for its sum drops it here, and the view still
+    * owns the handle. */
+  def select(cols: Column*): Materialized =
+    copy(frame = frame.select(cols: _*))(rdd)
+}
+
 /** Manual materialization for iterative dataflows — `localCheckpoint`
-  * with the two pieces `Dataset.localCheckpoint` doesn't give you:
+  * with the pieces `Dataset.localCheckpoint` doesn't give you:
   *
-  *  1. **A handle on the persisted RDD**, so the caller can `unpersist`
-  *     a round's blocks the moment the next round has materialized.
-  *     `Dataset.localCheckpoint` leaks every round's blocks until driver
-  *     GC + ContextCleaner get around to them; in a long back-to-back
-  *     query run (or a long-lived cluster app) that deferred cleanup
-  *     lands inside LATER queries' run time — measured in round 3 as a
-  *     2-4x inflation of everything benched after the checkpoint-heavy
-  *     queries.
-  *  2. **Fused change-detection**: an accumulator counts rows where two
-  *     columns differ DURING the materialization pass, so an iterative
-  *     fixpoint (connected components) needs one Spark job per round,
-  *     not checkpoint + a second convergence-probe job.
+  *  1. **A handle on the persisted RDD** ([[Materialized.release]]), so
+  *     the caller can free a round's blocks the moment the next round
+  *     has materialized. `Dataset.localCheckpoint` leaks every round's
+  *     blocks until JVM GC + ContextCleaner get around to them; in a
+  *     long back-to-back query run (or a long-lived cluster app) that
+  *     deferred cleanup lands inside LATER queries' run time — measured
+  *     in round 3 as a 2-4x inflation of everything benched after the
+  *     checkpoint-heavy queries.
+  *  2. **Fused scalars**: accumulators count rows where two columns
+  *     differ, and sum a long column, DURING the materialization pass,
+  *     so an iterative fixpoint (connected components) needs one Spark
+  *     job per round, not checkpoint + a second convergence-probe job,
+  *     and a loop that needs a global scalar per round (the adaptive-
+  *     HyperBall quantized ball-sum) gets it without a second full scan
+  *     of the frame it just wrote. The row count is free too (the
+  *     persisting `count()` already ran), which is what state-budget
+  *     guards read.
+  *  3. **Capped stats.** Spark 4's `Dataset.localCheckpoint` keeps
+  *     `originStats` from the pre-checkpoint plan (so broadcast decisions
+  *     survive checkpointing) — useful, EXCEPT that join size estimates
+  *     are PRODUCTS of their input sizes. An iterative algorithm that
+  *     joins its own previous result k times per round therefore
+  *     compounds the estimate k-fold per round: the BigInt grows to
+  *     millions of digits and query planning burns unbounded CPU in
+  *     BigInteger.multiply inside stats estimation (measured on a
+  *     2000-edge chain: round time 0.4s -> 119s by round 10, the stat at
+  *     28M digits). Capping at Long.MaxValue keeps honest small
+  *     estimates exact — a genuinely-small materialized frame still
+  *     broadcasts — while collapsing runaway products to "huge", which
+  *     is all any consumer needs to know. Per-round stats work becomes
+  *     O(capped leaves), i.e. flat.
   *
-  * Stats are capped exactly like [[StatsTruncate]] (see there for the
-  * BigInt-blowup rationale). Unlike `RDD.localCheckpoint`, lineage is NOT
-  * truncated — on block loss (executor death on a real cluster) Spark can
-  * still recompute through the parent chain, at the cost of a driver-side
-  * plan chain that grows O(rounds); bounded in practice by `maxIter`.
+  * InternalRow passthrough (no Row encode/decode), hence the
+  * private[sql] access and this file's package.
   */
 object CheckpointOps {
   private val Cap = BigInt(Long.MaxValue)
 
-  /** Materialize `df` into persisted blocks and return (frame-on-blocks,
-    * rdd-handle, count-of-rows-where-col(aIdx) != col(bIdx)). Pass
-    * aIdx = bIdx to skip the diff (returns 0). Null-safe: null != non-null
-    * counts as a change. */
-  def checkpointDiff(df: DataFrame, aIdx: Int, bIdx: Int)
-      : (DataFrame, RDD[InternalRow], Long) = {
-    val (out, rdd, diff, _) = materialize(df, aIdx, bIdx, truncate = false)
-    (out, rdd, diff)
-  }
-
-  /** [[checkpointTruncated]] that ALSO sums a long column during the
-    * materialization pass (the [[checkpointDiff]] accumulator
-    * discipline: updates happen inside the persisting count action, so
-    * Spark applies each task's update exactly once). An iterative loop
-    * that needs a global scalar per round (the adaptive-HyperBall
-    * quantized ball-sum) gets it without a second full scan of the
-    * frame it just wrote — at corpus scale that second scan is a full
-    * register-table pass per hop. Null sums as 0. */
-  def checkpointSum(df: DataFrame, sumIdx: Int)
-      : (DataFrame, RDD[InternalRow], Long) = {
-    val (out, rdd, s, _) =
-      materialize(df, 0, 0, truncate = false, sumIdx = sumIdx)
-    (out, rdd, s)
-  }
-
-  /** [[checkpointSum]] with lineage truncation (see
-    * [[checkpointTruncated]]). */
-  def checkpointSumTruncated(df: DataFrame, sumIdx: Int)
-      : (DataFrame, RDD[InternalRow], Long) = {
-    val (out, rdd, s, _) =
-      materialize(df, 0, 0, truncate = true, sumIdx = sumIdx)
-    (out, rdd, s)
-  }
-
-  /** [[checkpointSumTruncated]] that ALSO surfaces the materialized row
-    * count (free — the persisting `rdd.count()` already ran): an
-    * iterative fold that needs both a did-anything-change count and a
-    * global scalar per round (the incremental adaptive-HyperBall
-    * ball-sum deltas) gets them from the ONE materializing pass. */
-  def checkpointCountSumTruncated(df: DataFrame, sumIdx: Int)
-      : (DataFrame, RDD[InternalRow], Long, Long) = {
-    val (out, rdd, s, n) =
-      materialize(df, 0, 0, truncate = true, sumIdx = sumIdx)
-    (out, rdd, n, s)
-  }
-
-  private def materialize(df: DataFrame, aIdx: Int, bIdx: Int,
-                          truncate: Boolean, sumIdx: Int = -1)
-      : (DataFrame, RDD[InternalRow], Long, Long) = {
+  /** Materialize `df` into persisted blocks in ONE Spark job and return
+    * the frame on them with what the pass counted.
+    *
+    * `diff = Some((a, b))` counts rows where column a != column b
+    * (null-safe: null vs non-null is a change, two nulls are not);
+    * `sum = Some(i)` sums long column i (nulls skip). Both accumulate
+    * inside the persisting count action, so Spark applies each task's
+    * update exactly once; only the requested accumulators
+    * (`graft.checkpointDiff`, `graft.checkpointSum`) are registered.
+    *
+    * `truncate` adds LINEAGE TRUNCATION (`RDD.localCheckpoint` before the
+    * materializing count). The kept-lineage default is right for
+    * FIXED-round loops (3-5 rounds: recompute-on-block-loss survives,
+    * plan chain stays small; the logical plan chain grows
+    * O(rounds)), but a loop whose round count is DATA-DEPENDENT — SCC's
+    * flood fills run for the live subgraph's diameter — serializes the
+    * whole parent RDD chain into every task: measured on the 48-node
+    * chain spec, task binaries grew 2.3 → 5.3 MiB over the run,
+    * O(rounds²) total serialization. Truncating caps the chain at the
+    * previous round's materialized blocks. Trade, explicitly: truncated
+    * state CANNOT be recomputed after executor loss — a long-lived
+    * cluster deployment should periodically reliable-checkpoint the loop
+    * state instead (same knob, `sparkContext.setCheckpointDir` +
+    * `RDD.checkpoint`); in this engine the truncated frames are
+    * round-internal and superseded copies release only after their
+    * successor lands. */
+  def materialize(df: DataFrame, truncate: Boolean = false,
+                  diff: Option[(Int, Int)] = None,
+                  sum: Option[Int] = None): Materialized = {
     val cdf = df.asInstanceOf[classic.Dataset[Row]]
     val spark = cdf.sparkSession
     val qe = cdf.queryExecution
     val types = qe.analyzed.output.map(_.dataType)
-    val (aType, bType) = (types(aIdx), types(bIdx))
-    val acc = spark.sparkContext.longAccumulator("graft.checkpointDiff")
-    val sumAcc = spark.sparkContext.longAccumulator("graft.checkpointSum")
-    val trackDiff = aIdx != bIdx
+    val diffTap = diff.map { case (a, b) => (a, b, types(a), types(b),
+      spark.sparkContext.longAccumulator("graft.checkpointDiff")) }
+    val sumTap = sum.map(i =>
+      (i, spark.sparkContext.longAccumulator("graft.checkpointSum")))
     val rdd = qe.toRdd.mapPartitions { it =>
       it.map { r =>
-        if (trackDiff) {
-          val a = if (r.isNullAt(aIdx)) null else r.get(aIdx, aType)
-          val b = if (r.isNullAt(bIdx)) null else r.get(bIdx, bType)
-          if (a != b) acc.add(1L)
+        diffTap match {
+          case Some((a, b, aType, bType, acc)) =>
+            val x = if (r.isNullAt(a)) null else r.get(a, aType)
+            val y = if (r.isNullAt(b)) null else r.get(b, bType)
+            if (x != y) acc.add(1L)
+          case None =>
         }
-        if (sumIdx >= 0 && !r.isNullAt(sumIdx))
-          sumAcc.add(r.getLong(sumIdx))
+        sumTap match {
+          case Some((i, acc)) => if (!r.isNullAt(i)) acc.add(r.getLong(i))
+          case None =>
+        }
         r.copy()
       }
     }
@@ -128,8 +148,8 @@ object CheckpointOps {
     val plan = LogicalRDD(
       qe.analyzed.output, rdd, declared, Nil,
       false, None)(spark, Some(capped), None)
-    (classic.Dataset.ofRows(spark, plan), rdd,
-      if (sumIdx >= 0) sumAcc.value else acc.value, n)
+    Materialized(classic.Dataset.ofRows(spark, plan), n,
+      diffTap.map(_._5.value), sumTap.map(_._2.value))(rdd)
   }
 
   /** The materialized frame's physical partitioning, carried onto the
@@ -170,48 +190,5 @@ object CheckpointOps {
       })
       case other => other // non-expression: Unknown/RoundRobin/Single
     }
-  }
-
-  /** [[checkpointDiff]] without the diff. */
-  def checkpoint(df: DataFrame): (DataFrame, RDD[InternalRow]) = {
-    val (out, rdd, _) = checkpointDiff(df, 0, 0)
-    (out, rdd)
-  }
-
-  /** [[checkpoint]] that also returns the materialized ROW COUNT — free
-    * (the persisting `rdd.count()` already ran; this just surfaces its
-    * value), and the hook state-budget guards need: an iterative loop
-    * whose per-round state can blow up (pair-state BFS) checks the
-    * count the moment each round lands, no second job. */
-  def checkpointCount(df: DataFrame): (DataFrame, RDD[InternalRow], Long) = {
-    val (out, rdd, _, n) = materialize(df, 0, 0, truncate = false)
-    (out, rdd, n)
-  }
-
-  /** [[checkpoint]] / [[checkpointCount]] with LINEAGE TRUNCATION
-    * (`RDD.localCheckpoint` before the materializing count). The
-    * kept-lineage default is right for FIXED-round loops (3-5 rounds:
-    * recompute-on-block-loss survives, plan chain stays small), but a
-    * loop whose round count is DATA-DEPENDENT — SCC's flood fills run
-    * for the live subgraph's diameter — serializes the whole parent RDD
-    * chain into every task: measured on the 48-node chain spec, task
-    * binaries grew 2.3 → 5.3 MiB over the run, O(rounds²) total
-    * serialization. Truncating caps the chain at the previous round's
-    * materialized blocks. Trade, explicitly: truncated state CANNOT be
-    * recomputed after executor loss — a long-lived cluster deployment
-    * should periodically reliable-checkpoint the loop state instead
-    * (same knob, `sparkContext.setCheckpointDir` + `RDD.checkpoint`);
-    * in this engine the truncated frames are round-internal and
-    * superseded copies unpersist only after their successor lands. */
-  def checkpointTruncated(df: DataFrame): (DataFrame, RDD[InternalRow]) = {
-    val (out, rdd, _, _) = materialize(df, 0, 0, truncate = true)
-    (out, rdd)
-  }
-
-  /** See [[checkpointTruncated]]. */
-  def checkpointCountTruncated(df: DataFrame)
-      : (DataFrame, RDD[InternalRow], Long) = {
-    val (out, rdd, _, n) = materialize(df, 0, 0, truncate = true)
-    (out, rdd, n)
   }
 }

@@ -27,16 +27,16 @@ class CheckpointPartitioningSpec extends SparkTestBase {
     // big enough that AQE doesn't collapse to a single partition trivially
     val base = spark.range(0, 4000)
       .select((col("id") % 997).as("k"), col("id").as("v"))
-    val (agg, aggRdd) = CheckpointOps.checkpoint(
+    val agg = CheckpointOps.materialize(
       base.groupBy("k").agg(sum("v").as("s")))
     // same-key re-aggregation: the checkpoint's HashPartitioning(k)
     // satisfies the grouping distribution — no Exchange above the scan
-    val re = agg.groupBy("k").agg(max("s").as("m"))
+    val re = agg.frame.groupBy("k").agg(max("s").as("m"))
     val rePlan = executedString(re)
     assert(!rePlan.contains("Exchange"),
       s"same-key aggregation re-exchanged a partitioned checkpoint:\n" +
         rePlan.take(2000))
-    aggRdd.unpersist(false)
+    agg.release()
   }
 
   test("checkpointed-join results equal the unpartitioned reference " +
@@ -45,27 +45,29 @@ class CheckpointPartitioningSpec extends SparkTestBase {
       .select((col("id") % 61).as("k"), col("id").as("a"))
     val right = spark.range(0, 3000)
       .select((col("id") % 61).as("k"), (col("id") * 2).as("b"))
-    val (lc, lr) = CheckpointOps.checkpoint(
+    val lc = CheckpointOps.materialize(
       left.groupBy("k").agg(sum("a").as("a")))
-    val (rc, rr) = CheckpointOps.checkpoint(
+    val rc = CheckpointOps.materialize(
       right.groupBy("k").agg(sum("b").as("b")))
-    val joined = lc.join(rc, "k").select($"k", ($"a" + $"b").as("ab"))
+    val joined = lc.frame.join(rc.frame, "k")
+      .select($"k", ($"a" + $"b").as("ab"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
     val ref = left.groupBy("k").agg(sum("a").as("a"))
       .join(right.groupBy("k").agg(sum("b").as("b")), "k")
       .select($"k", ($"a" + $"b").as("ab"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
     assert(joined.sameElements(ref))
-    lr.unpersist(false)
-    rr.unpersist(false)
+    lc.release()
+    rc.release()
   }
 
   test("a frame with no exploitable partitioning still checkpoints and " +
     "computes (fallback path)") {
     val df = spark.range(0, 100).select(col("id"), (col("id") % 7).as("k"))
-    val (c, rdd) = CheckpointOps.checkpoint(df) // range: no hash part.
-    assert(c.count() == 100)
-    assert(c.groupBy("k").count().collect().map(_.getLong(1)).sum == 100)
-    rdd.unpersist(false)
+    val c = CheckpointOps.materialize(df) // range: no hash part.
+    assert(c.frame.count() == 100)
+    assert(c.frame.groupBy("k").count().collect().map(_.getLong(1)).sum ==
+      100)
+    c.release()
   }
 }
